@@ -31,14 +31,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_on_unit(a: Column | str, b: Column | str) -> Column:
-    """Cosine for pre-normalized vectors — just the dot product.  The
-    scale path: normalize once at ingest (O(n)), then every pairwise
-    similarity is a plain dot (saves 2 norms per pair in an O(n²) or
-    LSH-bucketed join)."""
-    return dot(a, b)
-
-
 def l2_normalize(a: Column | str) -> Column:
     a = F.col(a) if isinstance(a, str) else a
     n = norm(a)

@@ -13,29 +13,27 @@ it a single scan at any scale), then unpivoted into one row per check.
 Design rules:
 
 * Row-level predicates (not_null / accepted_values / in_range / matches /
-  expression) become ``SUM(CASE WHEN <violation> THEN 1 END)`` cells in a
-  single ``agg`` — N checks cost one table scan, not N.
-* ``unique`` is the one non-row-level constraint: violations =
+  expression) become ``COUNT(CASE WHEN <violation> THEN 1 END)`` cells in
+  a single ``agg`` — N checks cost one table scan, not N, and an empty
+  table reports 0 violations rather than NULL.
+* ``unique`` is table-level: violations =
   ``COUNT(col) - COUNT(DISTINCT col)`` (the number of surplus duplicate
   rows), computed in the same pass.
+* ``min_rows(n)`` is table-level too: violations =
+  ``greatest(n - COUNT(*), 0)``, the rows the table is short of ``n``,
+  reusing the report's own row count.
 * Referential integrity runs per FK edge as a broadcast-friendly
   left-anti probe (:func:`fk_audit`); at 100 TB the parent key sets of
   real dimension tables broadcast, and fact-fact edges fall back to a
   shuffled anti join that AQE plans.
-* The report is itself a DataFrame — pipelines gate publishes on
-  ``report.filter(~passed).count() == 0`` and persist the report next to
-  the data as an audit artifact.
-
-Division of labor with :mod:`..operators.quality`: quality.py is the
-GATE half — driver-side pass/fail scalars consumed inside
-``write_audit_publish``/``publish_manifested`` (raise-before-publish)
-plus zero-extra-scan ``observe`` write metrics.  This module is the
-REPORT half — the distributed, persistable, oracle-value-checked audit
-a platform schedules AGAINST the lake (per-check violation counts,
-FK-edge orphan audits, regex/cross-column invariants), surfaced as the
-registered queries in plans/dq.py.  The gate stays scalar because a
-publish decision needs one boolean now; the report stays a DataFrame
-because an audit trail needs rows you can store, diff, and re-verify.
+* The report is itself a DataFrame, one row per check and never data,
+  so it can be persisted next to the table as an audit artifact and
+  re-verified.  :func:`gate` is the publish decision over the same
+  report: it collects the suite's rows and raises :class:`AuditError`
+  naming every failed check.  ``write_audit_publish`` and
+  ``publish_manifested`` (sources/) and the ``llm_corpus`` pipeline gate
+  through it; the registered queries in plans/dq.py and
+  plans/streams.py return the report itself.
 """
 
 from __future__ import annotations
@@ -48,52 +46,56 @@ from pyspark.sql import functions as F
 
 @dataclass(frozen=True)
 class Check:
-    """One named constraint: ``violation`` is a boolean Column that is
-    True for every row breaking the contract (NULL-safe: the builders
-    below coalesce so NULL predicate results count as violations rather
-    than vanishing — the delete_where NULL lesson, writers.py)."""
+    """One named constraint: ``violations`` is the aggregate Column that
+    counts the rows (or, for ``min_rows``, the row shortfall) breaking
+    the contract.  Row-level builders coalesce their predicate so NULL
+    results count as violations rather than vanishing — the delete_where
+    NULL lesson, writers.py."""
 
     name: str
     kind: str
-    violation: Column | None  # row-level predicate, or None for `unique`
-    unique_col: str | None = None
+    violations: Column
+
+
+def _row_check(name: str, kind: str, ok: Column) -> Check:
+    bad = ~F.coalesce(ok, F.lit(False))
+    return Check(name, kind, F.count(F.when(bad, 1)))
 
 
 def not_null(col: str) -> Check:
-    return Check(f"{col}_not_null", "not_null", F.col(col).isNull())
+    return _row_check(f"{col}_not_null", "not_null", F.col(col).isNotNull())
 
 
 def unique(col: str) -> Check:
-    return Check(f"{col}_unique", "unique", None, unique_col=col)
+    return Check(f"{col}_unique", "unique",
+                 F.count(col) - F.countDistinct(col))
 
 
 def accepted_values(col: str, values: list) -> Check:
-    ok = F.col(col).isin(values)  # NULL.isin → NULL → violation below
-    return Check(f"{col}_accepted_values", "accepted_values",
-                 ~F.coalesce(ok, F.lit(False)))
+    return _row_check(f"{col}_accepted_values", "accepted_values",
+                      F.col(col).isin(values))
 
 
-def in_range(col: str, lo, hi, lo_inclusive: bool = False) -> Check:
+def in_range(col: str, lo, hi) -> Check:
+    """``lo < col <= hi``; NULL is a violation."""
     c = F.col(col)
-    lo_ok = (c >= lo) if lo_inclusive else (c > lo)
-    ok = lo_ok & (c <= hi)
-    return Check(f"{col}_in_range", "in_range",
-                 ~F.coalesce(ok, F.lit(False)))
+    return _row_check(f"{col}_in_range", "in_range", (c > lo) & (c <= hi))
 
 
 def matches(col: str, regex: str) -> Check:
-    ok = F.col(col).rlike(regex)
-    return Check(f"{col}_matches", "matches",
-                 ~F.coalesce(ok, F.lit(False)))
+    return _row_check(f"{col}_matches", "matches", F.col(col).rlike(regex))
 
 
 def expression(name: str, ok: Column) -> Check:
     """Arbitrary row-level invariant; ``ok`` True means the row passes."""
-    return Check(name, "expression", ~F.coalesce(ok, F.lit(False)))
+    return _row_check(name, "expression", ok)
 
 
-_REPORT_COLS = ["table_name", "check_name", "kind",
-                "rows_scanned", "violations", "passed"]
+def min_rows(n: int) -> Check:
+    """At least ``n`` rows (the empty-run guard).  ``COUNT(*)`` is the
+    report's ``n_rows`` cell; Spark evaluates the duplicate once."""
+    return Check(f"min_rows_{n}", "min_rows",
+                 F.greatest(F.lit(n) - F.count(F.lit(1)), F.lit(0)))
 
 
 def run_checks(df: DataFrame, table_name: str,
@@ -115,16 +117,9 @@ def run_checks(df: DataFrame, table_name: str,
             raise ValueError(
                 f"check name {c.name!r} must not contain quotes or "
                 "backslashes (interpolated into stack() SQL)")
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for i, c in enumerate(checks):
-        if c.kind == "unique":
-            aggs.append((F.count(c.unique_col)
-                         - F.countDistinct(c.unique_col))
-                        .cast("bigint").alias(f"v{i}"))
-        else:
-            aggs.append(F.sum(F.when(c.violation, 1).otherwise(0))
-                        .cast("bigint").alias(f"v{i}"))
-    wide = df.agg(*aggs)
+    wide = df.agg(F.count(F.lit(1)).alias("n_rows"),
+                  *(c.violations.cast("bigint").alias(f"v{i}")
+                    for i, c in enumerate(checks)))
     cells = ", ".join(
         f"'{c.name}', '{c.kind}', v{i}" for i, c in enumerate(checks))
     long = wide.select(
@@ -135,6 +130,32 @@ def run_checks(df: DataFrame, table_name: str,
     return long.select(
         "table_name", "check_name", "kind", "rows_scanned", "violations",
         (F.col("violations") == 0).alias("passed"))
+
+
+class AuditError(RuntimeError):
+    """A suite failed its gate; ``failures`` holds the failed report
+    rows.  Writers delete their staged data before re-raising it, so
+    nothing is published."""
+
+    def __init__(self, failures: list) -> None:
+        self.failures = failures
+        super().__init__(
+            "audit failed, publish aborted: "
+            + "; ".join(f"{r.check_name} ({r.violations} violations "
+                        f"in {r.rows_scanned} rows)" for r in failures))
+
+
+def gate(df: DataFrame, table_name: str, checks: list[Check]) -> list:
+    """The publish gate: run the suite, collect its report, and raise
+    :class:`AuditError` naming every failed check.  Returns the report
+    rows; an empty suite audits nothing and returns ``[]``."""
+    if not checks:
+        return []
+    report = run_checks(df, table_name, checks).collect()  # one row per check
+    failures = [r for r in report if not r.passed]
+    if failures:
+        raise AuditError(failures)
+    return report
 
 
 def fk_audit(child: DataFrame, child_table: str, fk_col: str,

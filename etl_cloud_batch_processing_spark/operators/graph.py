@@ -152,24 +152,13 @@ def _star_round(e: DataFrame) -> DataFrame:
 
 def _edge_fingerprint(e: DataFrame) -> tuple[int, int]:
     """(count, order-independent xxhash64 sum) of an edge set — one
-    partial-aggregated pass."""
+    partial-aggregated pass.  Star-CC compares consecutive rounds'
+    fingerprints instead of an exceptAll symmetric difference (two
+    anti-join shuffles per round); both frames are DISTINCT sets, so a
+    false "converged" needs a summed 64-bit collision."""
     row = e.agg(F.count(F.lit(1)).alias("n"),
                 F.sum(F.xxhash64("u", "v")).alias("h")).first()
     return (int(row["n"] or 0), int(row["h"] or 0))
-
-
-def _edge_delta(old: DataFrame, new: DataFrame) -> float:
-    """0 iff the two edge sets are identical, judged by (count,
-    summed-xxhash64) fingerprints — ONE cheap aggregate per frame
-    (both materialized by the runner) instead of the two anti-join
-    shuffles a literal exceptAll symmetric difference costs per round
-    (measured: the exceptAll form put ~40% of the star-CC query's time
-    into convergence checking).  Both frames are DISTINCT sets, so the
-    hash sum is order-independent; a false "converged" needs a summed
-    64-bit collision between consecutive rounds (~2^-64, and any such
-    stop is caught by the query's value-check against the
-    recursive-CTE oracle and the union-find property tests)."""
-    return 0.0 if _edge_fingerprint(old) == _edge_fingerprint(new) else 1.0
 
 
 def connected_components_star(edges: DataFrame, src: str = "src",
@@ -194,8 +183,6 @@ def connected_components_star(edges: DataFrame, src: str = "src",
              .distinct()
              .localCheckpoint(eager=True))
 
-    step = _star_round
-
     # Carry the previous round's fingerprint forward explicitly (one
     # aggregate per round instead of two): each round's "old" frame IS
     # the previous round's "new", whose fingerprint we just computed.
@@ -214,7 +201,7 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     # materialize="metric": the fingerprint aggregate scans each new
     # edge frame exactly once (old's fingerprint is cached), so the
     # dedicated materialization job is redundant — one job per round.
-    res = iterate_to_fixpoint(e0, step, delta, tol=0.0,
+    res = iterate_to_fixpoint(e0, _star_round, delta, tol=0.0,
                               max_rounds=max_iter, checkpoint_every=1,
                               materialize="metric")
     stars = res.state  # (u, v): u -> its component root candidate

@@ -125,7 +125,7 @@ def merge_scd2(target: DataFrame, updates: DataFrame, keys: list[str],
       is_current`` chain.  Rather than silently corrupting the
       dimension, the merge raises at execution time (``raise_error``
       folded into the batch projection — fail-fast like
-      ``quality.run_checks``, but without forcing an extra eager pass
+      ``expectations.gate``, but without forcing an extra eager pass
       over the batch).
 
     Shape: ONE full-outer join of the CURRENT slice against the batch

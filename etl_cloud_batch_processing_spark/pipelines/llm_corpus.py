@@ -6,8 +6,9 @@ semantics, §2.12 operators).
 Stages per run date:
 
 1. **gate** — single-pass data-quality checks on the incoming batch
-   (operators/quality.run_checks); a failing gate raises BEFORE any
-   write, so a bad upstream drop never pollutes the corpus table.
+   (operators/expectations.gate); a failing check raises ``AuditError``
+   BEFORE any write, so a bad upstream drop never pollutes the corpus
+   table.
 2. **curate** — length/language/repetition filters + exact dedup in one
    scan + one exchange (the curation_pipeline shape).
 3. **mix** — deterministic per-source mixture sampling (md5 buckets),
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_cloud_batch_processing_spark.functions import text as T
-from etl_cloud_batch_processing_spark.operators import quality as Q
+from etl_cloud_batch_processing_spark.operators import expectations as X
 from etl_cloud_batch_processing_spark.sources.readers import read_parquet
 
 CORPUS_TABLE = "curated_corpus"
@@ -37,22 +38,13 @@ MIX_BP = {"web": 8000, "books": 5000, "wiki": 10000}
 DEFAULT_BP = 2500
 
 
-class QualityGateError(RuntimeError):
-    """Raised when the incoming batch fails its quality gate."""
-
-
 def gate(docs: DataFrame) -> None:
-    report = Q.run_checks(docs, [
-        Q.not_null("doc_id"),
-        Q.unique("doc_id"),
-        Q.not_null("text"),
-        Q.min_rows(1),
+    X.gate(docs, "documents", [
+        X.not_null("doc_id"),
+        X.unique("doc_id"),
+        X.not_null("text"),
+        X.min_rows(1),
     ])
-    failed = [r for r in report if not r.passed]
-    if failed:
-        raise QualityGateError(
-            "; ".join(f"{r.rule}({r.column}) observed={r.observed}"
-                      for r in failed))
 
 
 def curate(docs: DataFrame) -> DataFrame:

@@ -98,11 +98,12 @@ def dq_expectation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     row with its scan count, violation count, and verdict.
 
     Each table's checks compile into ONE conditional-aggregate scan
-    (operators/expectations.py:run_checks), so the whole gate costs
+    (operators/expectations.py:run_checks), so the whole report costs
     three scans and three 1-row exchanges at any SF; the unpivot is a
-    ``stack`` over the single aggregated row.  Pipelines gate a publish
-    on ``filter(NOT passed).count() == 0`` — the write-audit-publish
-    writer (sources/writers.py:84) is the intended consumer."""
+    ``stack`` over the single aggregated row.  The same compiled suite
+    gates publishes: ``expectations.gate`` collects this report and
+    raises on any failed row, and ``write_audit_publish`` /
+    ``publish_manifested`` (sources/) run it on their staged files."""
     ev = table(spark, sf_dir, "events")
     doc = table(spark, sf_dir, "documents")
     orders = table(spark, sf_dir, "orders")

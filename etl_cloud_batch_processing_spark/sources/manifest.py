@@ -604,12 +604,11 @@ def publish_manifested(df: DataFrame, path: str, run_date: str,
     vacuum-able orphan dir); there is no crash point at which a reader
     can see half a partition.
 
-    Returns the audit report; raises :class:`..writers.AuditError`
-    (staging removed) on a failed rule."""
-    from etl_cloud_batch_processing_spark.operators.quality import (
-        run_checks,
-    )
-    from etl_cloud_batch_processing_spark.sources.writers import AuditError
+    Returns the gate's report rows; re-raises
+    :class:`..operators.expectations.AuditError` (staging removed) on a
+    failed check."""
+    from etl_cloud_batch_processing_spark.operators.expectations import (
+        AuditError, gate)
 
     spark = df.sparkSession
     _, hpath, fs = _fs(spark, path)
@@ -620,11 +619,11 @@ def publish_manifested(df: DataFrame, path: str, run_date: str,
        .write.mode("overwrite").parquet(data_dir))
 
     staged = spark.read.parquet(data_dir)
-    report = run_checks(staged, list(rules)) if rules else []
-    failures = [r for r in report if not r.passed]
-    if failures:
+    try:
+        report = gate(staged, base, list(rules))
+    except AuditError:
         fs.delete(hpath(data_dir), True)
-        raise AuditError(failures)
+        raise
 
     new_files = _rel_parquet(hpath, fs, base, rel_dir)
     versions = _versions(hpath, fs, base)

@@ -71,17 +71,6 @@ def write_append_partition(df: DataFrame, path: str, run_date: str,
        .save(path))
 
 
-class AuditError(RuntimeError):
-    """A staged write failed its quality audit; nothing was published."""
-
-    def __init__(self, failures: list) -> None:
-        self.failures = failures
-        super().__init__(
-            "audit failed, publish aborted: "
-            + "; ".join(f"{r.rule} on {r.column} (observed {r.observed})"
-                        for r in failures))
-
-
 def write_audit_publish(df: DataFrame, path: str, run_date: str,
                         rules: list, fmt: str = "parquet",
                         partition_col: str = "dt") -> list:
@@ -94,12 +83,14 @@ def write_audit_publish(df: DataFrame, path: str, run_date: str,
        Spark/Hive file listing never surfaces in-flight data to
        readers of ``path``).  ``mode("overwrite")`` clears any stale
        staging left by a crashed prior attempt.
-    2. **Audit**: the staged directory is READ BACK and
-       ``operators.quality.run_checks`` runs against what was actually
-       written (one aggregation pass) — auditing the input frame
-       instead would miss writer/codec corruption.  Any failed rule
-       deletes the staging directory and raises :class:`AuditError`:
-       no partial partition, nothing published.
+    2. **Audit**: the staged directory is READ BACK and the
+       ``operators.expectations.gate`` suite runs against what was
+       actually written (one aggregation pass) — auditing the input
+       frame instead would miss writer/codec corruption.  Any failed
+       check deletes the staging directory and re-raises the gate's
+       :class:`..operators.expectations.AuditError`: no partial
+       partition, nothing published.  An empty ``rules`` list audits
+       nothing.
     3. **Publish**: a single filesystem ``rename`` moves the staged
        directory to ``<path>/<partition_col>=<run_date>``.  Re-runs
        replace the prior publish CRASH-SAFELY: the old partition is
@@ -113,10 +104,9 @@ def write_audit_publish(df: DataFrame, path: str, run_date: str,
        for a manifest commit (Iceberg/Delta-style), keeping stages 1–2
        unchanged.
 
-    Returns the check report (list of CheckResult) on success."""
-    from etl_cloud_batch_processing_spark.operators.quality import (
-        run_checks,
-    )
+    Returns the gate's report rows on success."""
+    from etl_cloud_batch_processing_spark.operators.expectations import (
+        AuditError, gate)
 
     spark = df.sparkSession
     jvm = spark._jvm
@@ -130,11 +120,11 @@ def write_audit_publish(df: DataFrame, path: str, run_date: str,
     df.write.mode("overwrite").format(fmt).save(staging_str)
 
     staged = spark.read.format(fmt).load(staging_str)
-    report = run_checks(staged, rules)
-    failures = [r for r in report if not r.passed]
-    if failures:
+    try:
+        report = gate(staged, base, rules)
+    except AuditError:
         fs.delete(hpath(staging_str), True)
-        raise AuditError(failures)
+        raise
 
     final = hpath(final_str)
     prev_str = f"{staging_str}.prev"
@@ -155,6 +145,32 @@ def write_audit_publish(df: DataFrame, path: str, run_date: str,
     if had_prior:
         fs.delete(prev, True)
     return report
+
+
+def observed_write(df: DataFrame, path: str,
+                   metric_cols: list[str] | None = None,
+                   fmt: str = "parquet") -> dict:
+    """Write ``df`` while collecting row/null metrics for free.
+
+    ``df.observe`` attaches aggregate accumulators to the plan that the
+    write action itself populates — rows written and per-column null
+    counts cost ZERO extra scans and zero extra jobs, versus the naive
+    "write, then read back and count" which doubles I/O.  This is how a
+    100 TB pipeline stage reports its output contract (row counts for
+    reconciliation, null rates for drift alarms) without paying for a
+    verification pass.
+
+    Returns the metrics dict: ``{"rows": n, "nulls_<col>": n, ...}``.
+    """
+    from pyspark.sql import Observation
+
+    metric_cols = metric_cols if metric_cols is not None else df.columns
+    obs = Observation()
+    exprs = [F.count(F.lit(1)).alias("rows")]
+    exprs += [F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}")
+              for c in metric_cols]
+    df.observe(obs, *exprs).write.mode("overwrite").format(fmt).save(path)
+    return obs.get
 
 
 def write_clustered(df: DataFrame, path: str, cluster_cols: list[str],

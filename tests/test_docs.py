@@ -27,9 +27,9 @@ def test_every_query_is_in_plans_md():
 
 def test_no_driver_materialization_in_engine_paths():
     """SURVEY.md §4.3: no collect()/toPandas() in any engine path.
-    Allowed exceptions, each corpus-size-INDEPENDENT: quality.run_checks
-    collects its ONE-ROW aggregated report (the check verdicts, never
-    data); linalg's Gram path collects O(dims)/O(dims²) frames (the
+    Allowed exceptions, each corpus-size-INDEPENDENT: expectations.gate
+    collects its run_checks report (one row per check, never data);
+    linalg's Gram path collects O(dims)/O(dims²) frames (the
     MLlib computePrincipalComponents architecture, MAX_GRAM_DIM-guarded);
     evolution's run-date list is 2 rows; probe_ivf_index fetches the
     probe-batch-sized cell list it pushes into the partition filter;
@@ -45,8 +45,8 @@ def test_no_driver_materialization_in_engine_paths():
         lines = f.read_text().splitlines()
         for i, line in enumerate(lines, 1):
             if ".collect()" in line or ".toPandas()" in line:
-                if f.name == "quality.py" and ".agg(" in line:
-                    continue  # the one-row report collect
+                if f.name == "expectations.py" and "run_checks(" in line:
+                    continue  # the gate's one-row-per-check report
                 ctx = " ".join(lines[max(0, i - 4):i])
                 if f.name in bounded_ok and "driver fetch" in ctx + line:
                     continue  # explicitly-marked bounded fetch

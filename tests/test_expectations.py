@@ -7,6 +7,7 @@ queries must match their DuckDB oracles.
 from __future__ import annotations
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from etl_cloud_batch_processing_spark import plans
@@ -37,6 +38,7 @@ def test_planted_violations_are_counted_exactly(spark):
         X.accepted_values("kind", ["click", "view"]),
         X.in_range("v", 0, 10.0),
         X.matches("kind", "^c"),
+        X.min_rows(6),
     ])
     assert rep["id_not_null"]["violations"] == 1
     assert rep["id_unique"]["violations"] == 1          # one surplus dup
@@ -45,8 +47,21 @@ def test_planted_violations_are_counted_exactly(spark):
     # -2.0 out of range, NULL v counts as violation
     assert rep["v_in_range"]["violations"] == 2
     assert rep["kind_matches"]["violations"] == 3       # zzz, NULL, view
+    assert rep["min_rows_6"]["violations"] == 1         # one row short
     assert all(r["rows_scanned"] == 5 for r in rep.values())
     assert not any(r["passed"] for r in rep.values())
+
+    # an empty frame fails only min_rows, short by n; the row-level and
+    # unique checks report 0 violations, not NULL
+    empty = _report(df.limit(0), "t", [
+        X.not_null("id"), X.unique("id"), X.in_range("v", 0, 10.0),
+        X.min_rows(3)])
+    assert empty["min_rows_3"]["violations"] == 3
+    assert [n for n, r in empty.items() if not r["passed"]] == ["min_rows_3"]
+    assert all(r["rows_scanned"] == 0 for r in empty.values())
+    with pytest.raises(X.AuditError) as exc:
+        X.gate(df.limit(0), "t", [X.not_null("id"), X.min_rows(3)])
+    assert [r.check_name for r in exc.value.failures] == ["min_rows_3"]
 
 
 def test_expression_check_null_safe(spark):
@@ -95,13 +110,36 @@ def test_suite_query_matches_oracle(spark, duck, sf_dir):
 
 def test_suite_is_single_scan_per_table(spark, sf_dir):
     """N checks must not mean N scans: the compiled plan reads the
-    events parquet exactly once for its six-check suite."""
+    events parquet exactly once for its five-check suite, min_rows
+    (the gate's empty-run guard) included."""
     ev = plans.registry.table(spark, sf_dir, "events")
     rep = X.run_checks(ev, "events", [
         X.not_null("event_id"), X.unique("event_id"),
-        X.in_range("value", 0, 1e6), X.not_null("user_id")])
+        X.in_range("value", 0, 1e6), X.not_null("user_id"),
+        X.min_rows(1)])
     plan = rep._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") <= 1
+
+
+def test_quality_checks_single_pass(spark, sf_dir):
+    ev = plans.registry.table(spark, sf_dir, "events")
+    rules = [X.not_null("event_id"), X.unique("event_id"),
+             X.not_null("event_type"),
+             X.accepted_values("event_type",
+                               ["click", "error", "purchase",
+                                "signup", "view"]),
+             X.min_rows(100)]
+    report = X.gate(ev, "events", rules)
+    assert len(report) == len(rules)
+    assert all(r.passed for r in report), report
+
+    # and failures are detected, not swallowed
+    bad = [X.in_range("value", 0.0, 1e-12), X.unique("user_id"),
+           X.min_rows(10**12)]
+    with pytest.raises(X.AuditError) as exc:
+        X.gate(ev, "events", bad)
+    assert ({r.check_name for r in exc.value.failures}
+            == {c.name for c in bad}), exc.value.failures
 
 
 def test_k_anonymity_ladder_invariants(spark, duck, sf_dir):

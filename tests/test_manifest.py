@@ -17,9 +17,11 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from etl_cloud_batch_processing_spark.operators.expectations import (
+    AuditError)
 from etl_cloud_batch_processing_spark.sources import manifest as M
 from etl_cloud_batch_processing_spark.sources.writers import (
-    AuditError, delete_where, write_clustered)
+    delete_where, write_clustered)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -183,7 +185,8 @@ def test_publish_manifested_replaces_run_date_and_prunes_dt(spark, tmp_path):
 
 
 def test_publish_manifested_audit_failure_commits_nothing(spark, tmp_path):
-    from etl_cloud_batch_processing_spark.operators.quality import min_rows
+    from etl_cloud_batch_processing_spark.operators.expectations import (
+        min_rows)
 
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").limit(10)
     out = str(tmp_path / "t")

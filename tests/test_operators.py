@@ -313,26 +313,6 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
     assert back.agg(F.sum("event_id"), F.count("*")).collect()[0] == checksum
 
 
-def test_quality_checks_single_pass(spark):
-    from etl_cloud_batch_processing_spark.operators import quality as Q
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    rules = [Q.not_null("event_id"), Q.unique("event_id"),
-             Q.not_null("event_type"),
-             Q.accepted_values("event_type",
-                               ["click", "error", "purchase",
-                                "signup", "view"]),
-             Q.min_rows(100)]
-    report = Q.run_checks(ev, rules)
-    assert all(r.passed for r in report), report
-
-    # and failures are detected, not swallowed
-    bad = [Q.in_range("value", 0.0, 1e-12), Q.unique("user_id"),
-           Q.min_rows(10**12)]
-    bad_report = Q.run_checks(ev, bad)
-    assert not any(r.passed for r in bad_report), bad_report
-
-
 def test_connected_components_chain_and_islands(spark):
     from etl_cloud_batch_processing_spark.operators.graph import (
         connected_components)
@@ -408,7 +388,7 @@ def test_merge_upsert_all_three_paths(spark):
 
 
 def test_observed_write_reports_metrics_without_second_scan(spark, tmp_path):
-    from etl_cloud_batch_processing_spark.operators.quality import (
+    from etl_cloud_batch_processing_spark.sources.writers import (
         observed_write,
     )
 

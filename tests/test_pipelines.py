@@ -212,6 +212,8 @@ def test_llm_corpus_pipeline_gate_curate_mix_write(spark, tmp_path):
 def test_llm_corpus_pipeline_gate_fails_on_bad_batch(spark, tmp_path):
     import pytest
 
+    from etl_cloud_batch_processing_spark.operators.expectations import (
+        AuditError)
     from etl_cloud_batch_processing_spark.pipelines import llm_corpus
 
     bad = spark.createDataFrame(
@@ -219,7 +221,7 @@ def test_llm_corpus_pipeline_gate_fails_on_bad_batch(spark, tmp_path):
         "doc_id long, text string, lang string, source string")
     p = str(tmp_path / "bad.parquet")
     bad.write.parquet(p)
-    with pytest.raises(llm_corpus.QualityGateError):
+    with pytest.raises(AuditError):
         llm_corpus.run(spark, "2021-03-10", p, str(tmp_path / "wh"))
 
 

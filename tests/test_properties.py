@@ -333,6 +333,7 @@ def test_expectations_counts_match_python_recount(spark, rows):
                X.not_null("k"), X.unique("k"),
                X.in_range("v", -50.0, 50.0),
                X.accepted_values("k", [1, 2, 3]),
+               X.min_rows(30),
            ]).collect()}
     ks = [k for k, _ in rows]
     vs = [v for _, v in rows]
@@ -342,6 +343,7 @@ def test_expectations_counts_match_python_recount(spark, rows):
     assert rep["v_in_range"] == sum(
         v is None or not (-50.0 < v <= 50.0) for v in vs)
     assert rep["k_accepted_values"] == sum(k not in (1, 2, 3) for k in ks)
+    assert rep["min_rows_30"] == max(30 - len(rows), 0)
 
 
 @given(st.lists(st.integers(1, 10 ** 7), min_size=1, max_size=80),

@@ -123,13 +123,13 @@ def _wap_frame(spark, rows):
 
 
 def test_write_audit_publish_happy_path(spark, tmp_path):
-    from etl_cloud_batch_processing_spark.operators import quality as Q
+    from etl_cloud_batch_processing_spark.operators import expectations as X
 
     path = str(tmp_path / "wap")
     df = _wap_frame(spark, [(1, 0.5), (2, 0.7), (3, 0.9)])
     report = W.write_audit_publish(
         df, path, "2021-03-10",
-        [Q.not_null("id"), Q.unique("id"), Q.min_rows(1)])
+        [X.not_null("id"), X.unique("id"), X.min_rows(1)])
     assert all(r.passed for r in report)
     back = spark.read.parquet(path)
     assert back.count() == 3
@@ -141,15 +141,15 @@ def test_write_audit_publish_happy_path(spark, tmp_path):
 def test_write_audit_publish_failed_audit_publishes_nothing(spark, tmp_path):
     import pytest
 
-    from etl_cloud_batch_processing_spark.operators import quality as Q
+    from etl_cloud_batch_processing_spark.operators import expectations as X
 
     path = str(tmp_path / "wap_fail")
     # duplicate ids -> the unique() rule must fail
     df = _wap_frame(spark, [(1, 0.5), (1, 0.7)])
-    with pytest.raises(W.AuditError) as exc:
+    with pytest.raises(X.AuditError) as exc:
         W.write_audit_publish(df, path, "2021-03-10",
-                              [Q.not_null("id"), Q.unique("id")])
-    assert any("unique" in r.rule for r in exc.value.failures)
+                              [X.not_null("id"), X.unique("id")])
+    assert any("unique" in r.check_name for r in exc.value.failures)
     # no published partition, no staging residue
     import os
     assert not os.path.exists(f"{path}/dt=2021-03-10")
@@ -157,10 +157,10 @@ def test_write_audit_publish_failed_audit_publishes_nothing(spark, tmp_path):
 
 
 def test_write_audit_publish_rerun_publishes_exactly_once(spark, tmp_path):
-    from etl_cloud_batch_processing_spark.operators import quality as Q
+    from etl_cloud_batch_processing_spark.operators import expectations as X
 
     path = str(tmp_path / "wap_rerun")
-    rules = [Q.not_null("id"), Q.min_rows(1)]
+    rules = [X.not_null("id"), X.min_rows(1)]
     W.write_audit_publish(
         _wap_frame(spark, [(1, 0.5), (2, 0.7)]), path, "2021-03-10", rules)
     # retry of the same run (possibly with corrected data) REPLACES
@@ -177,13 +177,13 @@ def test_write_audit_publish_failed_rerun_keeps_prior_publish(spark, tmp_path):
     good partition (the audit gate fires BEFORE the swap)."""
     import pytest
 
-    from etl_cloud_batch_processing_spark.operators import quality as Q
+    from etl_cloud_batch_processing_spark.operators import expectations as X
 
     path = str(tmp_path / "wap_keep")
-    rules = [Q.unique("id")]
+    rules = [X.unique("id")]
     W.write_audit_publish(
         _wap_frame(spark, [(1, 0.5), (2, 0.7)]), path, "2021-03-10", rules)
-    with pytest.raises(W.AuditError):
+    with pytest.raises(X.AuditError):
         W.write_audit_publish(
             _wap_frame(spark, [(9, 0.1), (9, 0.2)]),
             path, "2021-03-10", rules)
@@ -197,10 +197,10 @@ def test_write_audit_publish_rerun_leaves_no_prev_residue(spark, tmp_path):
     the set-aside copy must be gone (only the swap WINDOW may hold it)."""
     import os
 
-    from etl_cloud_batch_processing_spark.operators import quality as Q
+    from etl_cloud_batch_processing_spark.operators import expectations as X
 
     path = str(tmp_path / "wap_prev")
-    rules = [Q.min_rows(1)]
+    rules = [X.min_rows(1)]
     W.write_audit_publish(
         _wap_frame(spark, [(1, 0.5)]), path, "2021-03-10", rules)
     W.write_audit_publish(
@@ -216,10 +216,10 @@ def test_write_audit_publish_rerun_survives_stale_prev(spark, tmp_path):
     publishes normally."""
     import os
 
-    from etl_cloud_batch_processing_spark.operators import quality as Q
+    from etl_cloud_batch_processing_spark.operators import expectations as X
 
     path = str(tmp_path / "wap_stale_prev")
-    rules = [Q.min_rows(1)]
+    rules = [X.min_rows(1)]
     W.write_audit_publish(
         _wap_frame(spark, [(1, 0.5)]), path, "2021-03-10", rules)
     # simulate a prior re-run that crashed after the set-aside rename
@@ -235,12 +235,12 @@ def test_write_audit_publish_rerun_survives_stale_prev(spark, tmp_path):
 def test_write_audit_publish_staging_invisible_to_readers(spark, tmp_path):
     """In-flight staged data must never surface in a read of the table
     root (dot-prefixed dirs are excluded from Spark file listing)."""
-    from etl_cloud_batch_processing_spark.operators import quality as Q
+    from etl_cloud_batch_processing_spark.operators import expectations as X
 
     path = str(tmp_path / "wap_vis")
     W.write_audit_publish(
         _wap_frame(spark, [(1, 0.5)]), path, "2021-03-10",
-        [Q.min_rows(1)])
+        [X.min_rows(1)])
     # manually plant a staging dir (simulating another in-flight run)
     _wap_frame(spark, [(99, 9.9)]).write.parquet(
         f"{path}/.staging/dt=2021-03-11")
@@ -253,11 +253,24 @@ def test_write_audit_publish_empty_run_blocked_by_min_rows(spark, tmp_path):
     pipeline gates on min_rows (the empty-day guard of Case A)."""
     import pytest
 
-    from etl_cloud_batch_processing_spark.operators import quality as Q
+    from etl_cloud_batch_processing_spark.operators import expectations as X
 
     path = str(tmp_path / "wap_empty")
     empty = _wap_frame(spark, []).filter("id IS NOT NULL").limit(0)
-    with pytest.raises(W.AuditError):
-        W.write_audit_publish(empty, path, "2021-03-10", [Q.min_rows(1)])
+    with pytest.raises(X.AuditError):
+        W.write_audit_publish(empty, path, "2021-03-10", [X.min_rows(1)])
     import os
     assert not os.path.exists(f"{path}/dt=2021-03-10")
+
+
+def test_write_audit_publish_empty_rules_publishes_unaudited(spark, tmp_path):
+    """An empty rule list means "no audit": the run publishes and
+    leaves no staging directory behind."""
+    import os
+
+    path = str(tmp_path / "wap_norules")
+    assert W.write_audit_publish(
+        _wap_frame(spark, [(1, 0.5), (2, 0.7)]), path, "2021-03-10",
+        []) == []
+    assert spark.read.parquet(path).count() == 2
+    assert not os.path.exists(f"{path}/.staging/dt=2021-03-10")
