@@ -109,7 +109,9 @@ def run(spark: SparkSession, ds: str, source_root: str,
     raw = load_daily_csv(spark, source_root, ds)
     write_overwrite(raw, f"{warehouse}/{KEYWORD_HISTORY}")
 
-    staged = read_parquet(spark, f"{warehouse}/{KEYWORD_HISTORY}")
+    # Read-backs use the writer's schema, so they launch no footer job.
+    staged = read_parquet(spark, f"{warehouse}/{KEYWORD_HISTORY}",
+                          raw.schema)
     obs = Observation(f"case_a_typed_{ds}")
     typed = correct_types(staged).observe(
         obs,
@@ -125,12 +127,11 @@ def run(spark: SparkSession, ds: str, source_root: str,
 
     if metrics["rows_written"] == 0:
         # A zero-row day writes no dt= partition (dynamic overwrite has
-        # nothing to replace), so stage 3 has no input; if this is the
-        # table's first-ever run the path has no parquet footers at all
-        # and the read below would fail schema inference.
+        # nothing to replace), so stage 3 has no input: skip its jobs.
         return metrics
 
-    results = read_parquet(spark, f"{warehouse}/{SEARCH_RESULTS}")
+    results = read_parquet(spark, f"{warehouse}/{SEARCH_RESULTS}",
+                           typed.schema)
     # Partition-prune to the run's own slice before the day filter; the
     # reference scans the whole accumulated table every night instead.
     results = results.filter(F.col("dt") == ds).drop("dt")

@@ -152,6 +152,8 @@ def run(spark: SparkSession, ds: str, source_events_path: str,
     staged = unnest_params(extract(events, ds))
     write_overwrite(staged, f"{warehouse}/{RAW_TABLE}")
 
-    raw = read_parquet(spark, f"{warehouse}/{RAW_TABLE}")
+    # the writer's schema: no footer job (the source events keep
+    # inference, their on-disk types vary by producer)
+    raw = read_parquet(spark, f"{warehouse}/{RAW_TABLE}", staged.schema)
     write_append_partition(finalize(raw, ds),
                            f"{warehouse}/{FINAL_TABLE}", ds)

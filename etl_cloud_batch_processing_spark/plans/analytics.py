@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_cloud_batch_processing_spark.plans.registry import query, table
+from etl_cloud_batch_processing_spark.session import scoped_conf
 
 DEC = "decimal(18,2)"
 
@@ -1382,9 +1383,7 @@ def sql_scripting_threshold_search(spark: SparkSession,
     state is value-hash-checked."""
     ev = table(spark, sf_dir, "events")
     ev.createOrReplaceTempView("_sql_script_events")
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         out = spark.sql("""
             BEGIN
               DECLARE thr BIGINT DEFAULT 1;
@@ -1406,11 +1405,6 @@ def sql_scripting_threshold_search(spark: SparkSession,
         # scripts evaluate eagerly at the END of the block; pin the
         # result so the returned frame is stable
         return out
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 @query(

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_cloud_batch_processing_spark.plans.registry import query, table
+from etl_cloud_batch_processing_spark.session import scoped_conf
 from etl_cloud_batch_processing_spark.sources.writers import (
     write_append_partition,
 )
@@ -1258,8 +1259,8 @@ def manifest_stream_incremental_revenue(spark: SparkSession,
         # stream start of pure machinery) is not needed
         from etl_cloud_batch_processing_spark.streaming import windows as W
 
-        with W.scoped_shuffle_partitions(
-                spark, W.stream_state_partitions(spark, path)):
+        with scoped_conf(spark, {W.SHUFFLE_PARTITIONS:
+                                 W.stream_state_partitions(spark, path)}):
             W.drain_available_now_until(
                 lambda: (agg.writeStream
                          .foreachBatch(lambda b, _id:
@@ -1275,7 +1276,7 @@ def manifest_stream_incremental_revenue(spark: SparkSession,
     drain_to_version(2)                   # consumes v1 + v2
     M.publish_manifested(s[2], path, "r3")                     # v3
     drain_to_version(3)                   # resumes at v2, consumes v3
-    return spark.read.parquet(out)
+    return spark.read.schema(agg.schema).parquet(out)
 
 
 @query(

@@ -14,8 +14,15 @@ from pyspark.sql.window import Window
 
 from etl_cloud_batch_processing_spark.plans.registry import query, table
 from etl_cloud_batch_processing_spark.plans import sketches as SK
+from etl_cloud_batch_processing_spark.session import scoped_conf
 from etl_cloud_batch_processing_spark.streaming import windows as W
 from etl_cloud_batch_processing_spark.streaming.stateful import SESSION_GAP_MS
+
+#: The transformWithState drains' state store: the v2 operator needs
+#: multi-column-family state, which the HDFS-backed default refuses.
+_ROCKSDB = {"spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"}
 
 
 def _ntz(df: DataFrame) -> DataFrame:
@@ -111,10 +118,9 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tempfile.mkdtemp(prefix="stream_sink_")
     ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
     result = W.tumbling_counts(W.events_stream(spark, sf_dir))
-    W.run_available_now(result, out, ckpt,
-                        partitions=W.events_state_partitions(
-                            spark, sf_dir))
-    return _ntz(spark.read.parquet(out))
+    return _ntz(W.run_available_now(
+        result, out, ckpt,
+        partitions=W.events_state_partitions(spark, sf_dir)))
 
 
 @query(
@@ -140,11 +146,9 @@ def streaming_user_totals_stateful(spark: SparkSession,
     out = tempfile.mkdtemp(prefix="stateful_sink_")
     ckpt = tempfile.mkdtemp(prefix="stateful_ckpt_")
     result = S.user_running_totals_stream(W.events_stream(spark, sf_dir))
-    with W.scoped_shuffle_partitions(
-            spark, W.events_state_partitions(spark, sf_dir,
-                                             python_stateful=True)):
-        S.drain_running_totals(result, out, ckpt)
-    log = spark.read.parquet(out)
+    with scoped_conf(spark, {W.SHUFFLE_PARTITIONS: W.events_state_partitions(
+            spark, sf_dir, python_stateful=True)}):
+        log = S.drain_running_totals(result, out, ckpt)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (log.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
@@ -239,8 +243,8 @@ def streaming_pysource_event_counts(spark: SparkSession,
     # per start today — is still not baked in: the loop restarts until
     # the OFFSET says done, however many batches each start serves;
     # the zero-rows rule remains the helper's fallback).
-    with W.scoped_shuffle_partitions(
-            spark, W.stream_state_partitions(spark)):
+    with scoped_conf(spark, {W.SHUFFLE_PARTITIONS:
+                             W.stream_state_partitions(spark)}):
         W.drain_available_now_until(
             lambda: (agg.writeStream
                      .foreachBatch(lambda b, _id:
@@ -252,7 +256,7 @@ def streaming_pysource_event_counts(spark: SparkSession,
             source_done=lambda end: int(end["index"]) >= rows,
             bound=rows // batch_rows + 8,
             what="synthetic_events source")
-    return spark.read.parquet(out)
+    return spark.read.schema(agg.schema).parquet(out)
 
 
 def _drain_tws(spark: SparkSession, result: DataFrame,
@@ -272,19 +276,9 @@ def _drain_tws(spark: SparkSession, result: DataFrame,
 
     out = tempfile.mkdtemp(prefix=f"{prefix}_sink_")
     ckpt = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, "org.apache.spark.sql.execution."
-                   "streaming.state.RocksDBStateStoreProvider")
-    try:
-        with W.scoped_shuffle_partitions(spark, partitions):
-            S.drain_running_totals(result, out, ckpt)
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    return spark.read.parquet(out)
+    with scoped_conf(spark, {**_ROCKSDB,
+                             W.SHUFFLE_PARTITIONS: partitions}):
+        return S.drain_running_totals(result, out, ckpt)
 
 
 def _streaming_tws_recent_events(spark: SparkSession,
@@ -448,12 +442,8 @@ def _drain_tws_ptime(spark: SparkSession, result: DataFrame,
 
     out = tempfile.mkdtemp(prefix=f"{prefix}_sink_")
     ckpt = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, "org.apache.spark.sql.execution."
-                   "streaming.state.RocksDBStateStoreProvider")
-    try:
-        with W.scoped_shuffle_partitions(spark, partitions):
+    with scoped_conf(spark, _ROCKSDB):
+        with scoped_conf(spark, {W.SHUFFLE_PARTITIONS: partitions}):
             q = (result.writeStream
                  .foreachBatch(lambda b, _id:
                                b.write.mode("append").parquet(out))
@@ -476,12 +466,7 @@ def _drain_tws_ptime(spark: SparkSession, result: DataFrame,
             q.awaitTermination()
         except Exception:
             pass   # a stopped bookkeeping batch recovers on restart
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    return spark.read.parquet(out)
+    return spark.read.schema(result.schema).parquet(out)
 
 
 def _streaming_tws_ttl_counter(spark: SparkSession,
@@ -700,10 +685,9 @@ def streaming_enriched_segments(spark: SparkSession,
     ev = W.events_stream(spark, sf_dir)
     enriched = (ev.join(cust, ev.user_id == cust.c_custkey)
                 .select("event_id", "event_type", "c_mktsegment"))
-    W.run_available_now(enriched, out, ckpt,
-                        partitions=W.events_state_partitions(
-                            spark, sf_dir))
-    return spark.read.parquet(out)
+    return W.run_available_now(
+        enriched, out, ckpt,
+        partitions=W.events_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -728,10 +712,9 @@ def streaming_distinct_user_event_types(spark: SparkSession,
     ev = W.events_stream(spark, sf_dir)
     deduped = (ev.dropDuplicates(["user_id", "event_type"])
                .select("user_id", "event_type"))
-    W.run_available_now(deduped, out, ckpt,
-                        partitions=W.events_state_partitions(
-                            spark, sf_dir))
-    return spark.read.parquet(out)
+    return W.run_available_now(
+        deduped, out, ckpt,
+        partitions=W.events_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -778,10 +761,9 @@ def streaming_click_purchase_attribution(spark: SparkSession,
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
         & (F.col("c_ts") <= F.col("p_ts")))
         .select("purchase_id", "click_id", F.col("p_user").alias("user_id")))
-    W.run_available_now(joined, out, ckpt,
-                        partitions=W.events_state_partitions(
-                            spark, sf_dir))
-    return spark.read.parquet(out)
+    return W.run_available_now(
+        joined, out, ckpt,
+        partitions=W.events_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -825,10 +807,9 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tempfile.mkdtemp(prefix="sess_sink_")
     ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
     result = W.session_windows(W.events_stream(spark, sf_dir))
-    W.run_available_now(result, out, ckpt,
-                        partitions=W.events_state_partitions(
-                            spark, sf_dir))
-    return _ntz(spark.read.parquet(out))
+    return _ntz(W.run_available_now(
+        result, out, ckpt,
+        partitions=W.events_state_partitions(spark, sf_dir)))
 
 
 @query(
@@ -947,10 +928,9 @@ def streaming_unattributed_purchases(spark: SparkSession,
         "left_outer")
         .select("purchase_id", F.col("p_user").alias("user_id"),
                 "p_ts", "click_id"))
-    W.run_available_now(joined, out, ckpt,
-                        partitions=W.events_state_partitions(
-                            spark, sf_dir))
-    return _ntz(spark.read.parquet(out))
+    return _ntz(W.run_available_now(
+        joined, out, ckpt,
+        partitions=W.events_state_partitions(spark, sf_dir)))
 
 
 @query(
@@ -984,10 +964,12 @@ def streaming_dedup_within_watermark(spark: SparkSession,
                .dropDuplicatesWithinWatermark(["user_id", "event_type",
                                                "day"])
                .select("user_id", "event_type", "day"))
-    W.run_available_now(deduped, out, ckpt,
-                        partitions=W.events_state_partitions(
-                            spark, sf_dir))
-    return spark.read.parquet(out)
+    # Each key emits on its first arrival, so the no-data batch that
+    # follows the last data batch could only evict state: skip it.
+    with scoped_conf(spark, {W.NO_DATA_BATCHES: "false"}):
+        return W.run_available_now(
+            deduped, out, ckpt,
+            partitions=W.events_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -1032,10 +1014,9 @@ def streaming_hopping_counts(spark: SparkSession,
                 F.round(F.sum("value"), 6).alias("sum_value"))
            .select(F.col("w.start").alias("window_start"),
                    "event_type", "n_events", "sum_value"))
-    W.run_available_now(agg, out, ckpt,
-                        partitions=W.events_state_partitions(
-                            spark, sf_dir))
-    return _ntz(spark.read.parquet(out))
+    return _ntz(W.run_available_now(
+        agg, out, ckpt,
+        partitions=W.events_state_partitions(spark, sf_dir)))
 
 
 @query(

@@ -22,6 +22,7 @@ Config decisions (SURVEY.md §4.2 "config + layout, not rules"):
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -158,3 +159,23 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
         spark.conf.set(k, ENGINE_CONF[k])
     _ship_package(spark)
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict):
+    """Set session confs for the body only, then restore each key:
+    its previous value if it had been set, unset if it had not.  A
+    ``None`` value leaves its key alone, so an optional knob (a derived
+    partition count, say) passes straight through."""
+    conf = {k: str(v) for k, v in conf.items() if v is not None}
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -56,6 +56,9 @@ from pyspark.sql import functions as F
 
 _MF_RE = re.compile(r"^_manifest\.v(\d+)\.json$")
 
+#: Deletion-vector sidecar rows: one deleted position per row.
+_DV_SCHEMA = "fname string, row_index bigint"
+
 
 class ConcurrentModificationError(RuntimeError):
     """A commit's ``remove`` list names a file the CURRENT manifest no
@@ -230,7 +233,8 @@ def _dv_union(spark: SparkSession, base: str,
     rels = sorted({p for e in entries for p in (e.get("dv") or ())})
     if not rels:
         return None
-    return spark.read.parquet(*[f"{base}/{p}" for p in rels])
+    return spark.read.schema(_DV_SCHEMA).parquet(
+        *[f"{base}/{p}" for p in rels])
 
 
 def _apply_dvs(scan: DataFrame, dv: DataFrame) -> DataFrame:
@@ -615,10 +619,12 @@ def publish_manifested(df: DataFrame, path: str, run_date: str,
     base = path.rstrip("/")
     rel_dir = f".data/{run_date}-{uuid.uuid4().hex[:8]}"
     data_dir = f"{base}/{rel_dir}"
-    (df.withColumn("dt", F.lit(run_date))
-       .write.mode("overwrite").parquet(data_dir))
+    framed = df.withColumn("dt", F.lit(run_date))
+    framed.write.mode("overwrite").parquet(data_dir)
 
-    staged = spark.read.parquet(data_dir)
+    # the writer's schema: a schema-less read would launch a job to
+    # merge the staged files' footers
+    staged = spark.read.schema(framed.schema).parquet(data_dir)
     try:
         report = gate(staged, base, list(rules))
     except AuditError:
@@ -695,15 +701,16 @@ def merge_manifested(spark: SparkSession, path: str, source: DataFrame,
         survivor_files = _rel_parquet(hpath, fs, base, rel_dir)
 
     ins_dir = f".data/{run_date}-{uuid.uuid4().hex[:8]}"
-    (source.withColumn("dt", F.lit(run_date))
-     .write.mode("overwrite").parquet(f"{base}/{ins_dir}"))
+    framed = source.withColumn("dt", F.lit(run_date))
+    framed.write.mode("overwrite").parquet(f"{base}/{ins_dir}")
     upsert_files = _rel_parquet(hpath, fs, base, ins_dir)
-    n_src = spark.read.parquet(f"{base}/{ins_dir}").count()
+    ins = spark.read.schema(framed.schema).parquet(f"{base}/{ins_dir}")
+    n_src = ins.count()
 
     same_run = [e["file"] for e in entries
                 if e.get("dt") == run_date
                 and e["file"] not in {x["file"] for x in aff_entries}]
-    ins_schema = spark.read.parquet(f"{base}/{ins_dir}").schema.jsonValue()
+    ins_schema = ins.schema.jsonValue()
     v = commit_manifest(
         spark, base,
         add=([{"file": f, "dt": None} for f in survivor_files]
@@ -754,7 +761,7 @@ def delete_where_mor(spark: SparkSession, path: str, predicate) -> dict:
              F.col("__ri").cast("bigint").alias("row_index"))
      .coalesce(1)
      .write.mode("overwrite").parquet(f"{base}/{rel_dir}"))
-    staged = spark.read.parquet(f"{base}/{rel_dir}")
+    staged = spark.read.schema(_DV_SCHEMA).parquet(f"{base}/{rel_dir}")
     rows_deleted = staged.count()
     if rows_deleted == 0:
         fs.delete(hpath(f"{base}/{rel_dir}"), True)
@@ -848,15 +855,16 @@ def replace_manifested(spark: SparkSession, path: str, delete_pred,
         survivor_files = _rel_parquet(hpath, fs, base, rel_dir)
 
     ins_dir = f".data/{run_date}-{uuid.uuid4().hex[:8]}"
-    (insert_df.withColumn("dt", F.lit(run_date))
-     .write.mode("overwrite").parquet(f"{base}/{ins_dir}"))
+    framed = insert_df.withColumn("dt", F.lit(run_date))
+    framed.write.mode("overwrite").parquet(f"{base}/{ins_dir}")
     insert_files = _rel_parquet(hpath, fs, base, ins_dir)
-    rows_inserted = spark.read.parquet(f"{base}/{ins_dir}").count()
+    ins = spark.read.schema(framed.schema).parquet(f"{base}/{ins_dir}")
+    rows_inserted = ins.count()
 
     same_run = [e["file"] for e in entries
                 if e.get("dt") == run_date
                 and e["file"] not in set(affected_rel)]
-    ins_schema = spark.read.parquet(f"{base}/{ins_dir}").schema.jsonValue()
+    ins_schema = ins.schema.jsonValue()
     v = commit_manifest(
         spark, base,
         add=([{"file": f, "dt": None} for f in survivor_files]
@@ -931,7 +939,8 @@ def update_where_manifested(spark: SparkSession, path: str,
     (updated.coalesce(len(aff_entries))
      .write.mode("overwrite").parquet(f"{base}/{rel_dir}"))
     new_files = _rel_parquet(hpath, fs, base, rel_dir)
-    rows_out = spark.read.parquet(f"{base}/{rel_dir}").count()
+    rows_out = (spark.read.schema(updated.schema)
+                .parquet(f"{base}/{rel_dir}").count())
     if rows_out != rows_read:
         raise IOError(
             f"update_where (manifest): zero-loss audit failed — read "

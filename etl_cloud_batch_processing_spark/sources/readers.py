@@ -29,8 +29,11 @@ FIXTURE_TABLES = (
 
 def read_parquet(spark: SparkSession, path: str,
                  schema: StructType | None = None) -> DataFrame:
-    """Parquet scan; schema optional because parquet footers are
-    authoritative (no inference pass needed)."""
+    """Parquet scan.  Without ``schema`` Spark launches one job to
+    merge the files' footers before the scan is planned; pass the
+    schema whenever the caller knows it (a read-back of a frame it has
+    just written), and leave it out for external inputs whose on-disk
+    types vary by producer."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)

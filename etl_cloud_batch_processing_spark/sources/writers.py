@@ -119,7 +119,9 @@ def write_audit_publish(df: DataFrame, path: str, run_date: str,
 
     df.write.mode("overwrite").format(fmt).save(staging_str)
 
-    staged = spark.read.format(fmt).load(staging_str)
+    # the writer's schema: no inference pass (for parquet, a job that
+    # merges the staged footers)
+    staged = spark.read.format(fmt).schema(df.schema).load(staging_str)
     try:
         report = gate(staged, base, rules)
     except AuditError:

@@ -617,14 +617,15 @@ def ttl_counter_tws_stream(events: DataFrame, ttl_ms: int) -> DataFrame:
 
 
 def drain_running_totals(result: DataFrame, out_dir: str,
-                         checkpoint_dir: str) -> None:
+                         checkpoint_dir: str) -> DataFrame:
     """AvailableNow drain of an update-mode stateful stream into
     parquet.  File sinks only speak append, so emissions go through
     foreachBatch: each micro-batch's updated rows are appended, giving
     an emission LOG (one row per key per touching batch); the reader
     reconstructs final state as the max-count row per key.  This is the
     standard CDC-style pattern — the log is also exactly what a
-    downstream incremental consumer wants."""
+    downstream incremental consumer wants.  Returns the log, read with
+    the plan's schema (no footer-merge job)."""
     q = (result.writeStream
          .foreachBatch(lambda batch, _id:
                        batch.write.mode("append").parquet(out_dir))
@@ -633,6 +634,7 @@ def drain_running_totals(result: DataFrame, out_dir: str,
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
+    return result.sparkSession.read.schema(result.schema).parquet(out_dir)
 
 
 SESSION_SCHEMA = StructType([

@@ -24,7 +24,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_cloud_batch_processing_spark.session import scoped_conf
 from etl_cloud_batch_processing_spark.sources.readers import read_parquet
+
+#: Read once at query start and baked into the checkpoint, so a drain
+#: sets it around its own start only (:func:`scoped_conf`) and no batch
+#: query sees the value.
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+#: Whether a drain runs the extra batch that advances the watermark
+#: after its last data batch.  Only drains whose output never waits on
+#: the watermark may turn it off (:func:`scoped_conf`).
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 #: Env override for the streaming state-partition derivation below —
 #: a production deployment sizes state partitions to key cardinality /
@@ -131,24 +142,6 @@ def stream_state_partitions(spark: SparkSession, *paths: str,
         # of restarting with different cores and expecting it to move.
         return max(derived, spark.sparkContext.defaultParallelism)
     return derived
-
-
-@contextlib.contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Set ``spark.sql.shuffle.partitions`` around a streaming start
-    (the value is read once at query start and baked into the
-    checkpoint), restoring the session's batch value afterwards so no
-    batch query sees it."""
-    if n is None:
-        yield
-        return
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def events_schema(spark: SparkSession, sf_dir: str):
@@ -308,17 +301,23 @@ def drain_available_now_until(start_query, *, source_done=None,
 
 def run_available_now(result: DataFrame, out_dir: str,
                       checkpoint_dir: str,
-                      partitions: int | None = None) -> None:
+                      partitions: int | None = None) -> DataFrame:
     """Drain everything currently available through the streaming plan
-    into a parquet sink, then stop.  Append mode + checkpoint = each
-    window written exactly once; re-running with the same checkpoint is
-    a no-op (idempotent restart), with a fresh checkpoint a rebuild.
+    into a parquet sink, then stop, and return the sink.  Append mode +
+    checkpoint = each window written exactly once; re-running with the
+    same checkpoint is a no-op (idempotent restart), with a fresh
+    checkpoint a rebuild.
 
     ``partitions`` (optional) pins the drain's shuffle/state-store
     partition count — pass :func:`stream_state_partitions` of the
     source so state overhead scales with input instead of sitting at
-    the session's batch constant."""
-    with scoped_shuffle_partitions(result.sparkSession, partitions):
+    the session's batch constant.
+
+    The sink is read with the plan's own schema: the writer knows it,
+    and a schema-less read would launch one more job to merge the
+    files' footers."""
+    spark = result.sparkSession
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: partitions}):
         q = (result.writeStream
              .format("parquet")
              .option("path", out_dir)
@@ -327,3 +326,4 @@ def run_available_now(result: DataFrame, out_dir: str,
              .trigger(availableNow=True)
              .start())
     q.awaitTermination()
+    return spark.read.schema(result.schema).parquet(out_dir)

@@ -39,3 +39,10 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def total_jobs(spark):
+    """The session's job counter (``DAGScheduler.numTotalJobs``): call
+    it before and after a step and take the difference."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs

@@ -54,6 +54,24 @@ def test_no_driver_materialization_in_engine_paths():
     assert not offenders, offenders
 
 
+def test_no_schemaless_sink_read_back_in_streaming_paths():
+    """A drain knows its sink's schema; reading the sink back without it
+    launches one more Spark job to merge the files' footers.  No
+    schema-less read of a sink directory (``out`` / ``out_dir``) may
+    come back into plans/streams.py or streaming/."""
+    import re
+
+    pkg = ROOT / "etl_cloud_batch_processing_spark"
+    sink_read = re.compile(
+        r"(\.read\.parquet\(|read_parquet\(\s*\w+\s*,)\s*out(_dir)?\s*\)")
+    files = [pkg / "plans" / "streams.py", *(pkg / "streaming").glob("*.py")]
+    offenders = [f"{f.relative_to(ROOT)}:{i}"
+                 for f in files
+                 for i, line in enumerate(f.read_text().splitlines(), 1)
+                 if sink_read.search(line)]
+    assert not offenders, offenders
+
+
 def test_graded_window_rotates_ungraded_first():
     """The external harness grades at most the first 50 queries()
     entries (DRIVER_NOTES.md #2).  Ordering must be MECHANICAL, not

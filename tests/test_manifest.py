@@ -184,6 +184,23 @@ def test_publish_manifested_replaces_run_date_and_prunes_dt(spark, tmp_path):
     assert M.read_manifest(spark, out, dts=["2024-01-02"]).count() == 80
 
 
+def test_publish_manifested_reads_staging_with_writer_schema(
+        spark, tmp_path, total_jobs):
+    """With no rules the publish is one job, the write: the staged
+    read-back takes the written frame's schema, so no job merges the
+    staged footers.  The recorded schema is the one a footer read of
+    the staged files reports."""
+    df = spark.createDataFrame([(1, "a", 2.5), (2, None, None)],
+                               "id bigint, tag string, v double")
+    out = str(tmp_path / "t")
+    j0 = total_jobs()
+    M.publish_manifested(df, out, "2024-01-01")
+    assert total_jobs() - j0 == 1
+    staged = spark.read.parquet(f"{out}/.data/*")
+    assert M._manifest_doc(spark, out)[1]["schema"] == \
+        staged.schema.jsonValue()
+
+
 def test_publish_manifested_audit_failure_commits_nothing(spark, tmp_path):
     from etl_cloud_batch_processing_spark.operators.expectations import (
         min_rows)

@@ -288,7 +288,7 @@ def test_case_a_empty_day_zeroes_metrics(spark, tmp_path):
 def test_case_b_empty_window_completes(spark, tmp_path):
     """A run whose 3-day window matches zero purchase events must
     complete: the unpartitioned staging overwrite writes a schema-
-    bearing empty parquet (so the stage-3 read-back infers fine), and
+    bearing empty parquet (so even a footer read of it works), and
     the final partitioned append simply writes no dt= partition."""
     src, wh = str(tmp_path / "src"), str(tmp_path / "wh")
     _case_b_events(spark).write.parquet(f"{src}/unified_events.parquet")
@@ -296,3 +296,21 @@ def test_case_b_empty_window_completes(spark, tmp_path):
     raw = read_parquet(spark, f"{wh}/{case_b.RAW_TABLE}")
     assert raw.count() == 0
     assert "transaction_number" in raw.columns
+
+
+def test_case_a_and_b_runs_launch_no_footer_jobs(spark, tmp_path, total_jobs):
+    """The read-backs of the engine's own staging and results tables
+    take the writer's schema, so a non-empty run's jobs are its writes
+    (and, for Case B, the footer read of the external events source)."""
+    src, wh = str(tmp_path / "a_src"), str(tmp_path / "a_wh")
+    _write_case_a_csvs(src)
+    j0 = total_jobs()
+    assert case_a.run(spark, "2021-03-10", src, wh)["rows_written"] == 3
+    assert total_jobs() - j0 == 3
+
+    src, wh = str(tmp_path / "b_src"), str(tmp_path / "b_wh")
+    _case_b_events(spark).write.parquet(f"{src}/unified_events.parquet")
+    j0 = total_jobs()
+    case_b.run(spark, "2021-03-21", f"{src}/unified_events.parquet", wh)
+    assert total_jobs() - j0 == 3
+    assert read_parquet(spark, f"{wh}/{case_b.FINAL_TABLE}").count() == 2

@@ -13,19 +13,17 @@ from etl_cloud_batch_processing_spark.operators.iterative import (
     changed_count_metric,
     iterate_to_fixpoint,
 )
+from etl_cloud_batch_processing_spark.session import scoped_conf
 from etl_cloud_batch_processing_spark.streaming.windows import (
+    NO_DATA_BATCHES,
+    SHUFFLE_PARTITIONS,
     STREAM_PARTITIONS_ENV,
     drain_available_now_until,
-    scoped_shuffle_partitions,
     stream_state_partitions,
 )
 
 
-def _total_jobs(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
-
-
-def _run_fixpoint(spark, materialize: str):
+def _run_fixpoint(spark, total_jobs, materialize: str):
     state = spark.createDataFrame([(i,) for i in range(8)], "v bigint") \
         .localCheckpoint(eager=True)
 
@@ -35,20 +33,20 @@ def _run_fixpoint(spark, materialize: str):
     def metric(old, new):
         return float(new.agg(F.sum("v")).first()[0] or 0)
 
-    j0 = _total_jobs(spark)
+    j0 = total_jobs()
     res = iterate_to_fixpoint(state, step, metric, tol=0.0,
                               max_rounds=50, checkpoint_every=2,
                               materialize=materialize)
-    return res, _total_jobs(spark) - j0
+    return res, total_jobs() - j0
 
 
-def test_fused_materialize_same_fixpoint_fewer_jobs(spark):
+def test_fused_materialize_same_fixpoint_fewer_jobs(spark, total_jobs):
     """materialize='metric' must land on the identical fixpoint
     (rounds, converged, values) while launching strictly fewer Spark
     jobs — the whole point of the mode (one job per round instead of
     two)."""
-    eager, eager_jobs = _run_fixpoint(spark, "count")
-    fused, fused_jobs = _run_fixpoint(spark, "metric")
+    eager, eager_jobs = _run_fixpoint(spark, total_jobs, "count")
+    fused, fused_jobs = _run_fixpoint(spark, total_jobs, "metric")
     assert fused.rounds == eager.rounds == 3
     assert fused.converged and eager.converged
     assert fused.final_metric == eager.final_metric == 0.0
@@ -160,16 +158,21 @@ def test_stream_state_partitions_scale_with_input(spark, tmp_path):
         del os.environ[STREAM_PARTITIONS_ENV]
 
 
-def test_scoped_shuffle_partitions_restores(spark):
-    key = "spark.sql.shuffle.partitions"
+def test_scoped_conf_restores(spark):
+    """Each key gets its prior value back, or is unset again if it was
+    unset; a None value leaves its key alone; a raising body restores
+    too."""
+    key, unset = SHUFFLE_PARTITIONS, NO_DATA_BATCHES
     before = spark.conf.get(key)
-    with scoped_shuffle_partitions(spark, 3):
+    assert spark.conf.get(unset, None) is None
+    with scoped_conf(spark, {key: 3, unset: "false"}):
         assert spark.conf.get(key) == "3"
+        assert spark.conf.get(unset) == "false"
     assert spark.conf.get(key) == before
-    with scoped_shuffle_partitions(spark, None):
+    assert spark.conf.get(unset, None) is None
+    with scoped_conf(spark, {key: None}):
         assert spark.conf.get(key) == before
-    # restored even when the body raises
     with pytest.raises(RuntimeError):
-        with scoped_shuffle_partitions(spark, 5):
+        with scoped_conf(spark, {key: 5}):
             raise RuntimeError("boom")
     assert spark.conf.get(key) == before

@@ -30,6 +30,59 @@ def test_streaming_equals_batch_closed_windows(spark, sf_dir, tmp_path):
     assert len(got) > 0
 
 
+def test_run_available_now_returns_the_sink(spark, sf_dir, tmp_path):
+    """The frame the drain returns (read with the plan's schema) is the
+    sink a schema-less, footer-inferring read sees: same schema, same
+    rows."""
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    got = W.run_available_now(
+        W.tumbling_counts(W.events_stream(spark, sf_dir)), out, ckpt)
+    inferred = spark.read.parquet(out)
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, inferred.collect()))
+
+
+def test_watermark_dedup_drain_skips_the_no_data_batch(spark, sf_dir, duck):
+    """``streaming_dedup_within_watermark`` runs without the no-data
+    batch: one micro-batch, none of them empty, and its output is still
+    the DISTINCT oracle's."""
+    from pyspark.sql.streaming.listener import StreamingQueryListener
+
+    from etl_cloud_batch_processing_spark import plans
+
+    class Batches(StreamingQueryListener):
+        """Input rows of each batch of the queries started while it
+        listens."""
+
+        def __init__(self):
+            self.started, self.rows = set(), []
+
+        def onQueryStarted(self, event):
+            self.started.add(str(event.id))
+
+        def onQueryProgress(self, event):
+            if str(event.progress.id) in self.started:
+                self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    spec = plans.REGISTRY["streaming_dedup_within_watermark"]
+    listener = Batches()
+    spark.streams.addListener(listener)
+    try:
+        got = {tuple(r) for r in spec.builder(spark, sf_dir).collect()}
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert len(listener.rows) == 1 and listener.rows[0] > 0, listener.rows
+    assert got == set(duck.execute(spec.oracle).fetchall())
+
+
 def test_streaming_restart_is_noop(spark, sf_dir, tmp_path):
     out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
