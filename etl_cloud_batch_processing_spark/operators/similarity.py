@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from etl_cloud_batch_processing_spark.functions import vectors as V
 from etl_cloud_batch_processing_spark.plans.registry import ptable, query, table
+from etl_cloud_batch_processing_spark.session import scratch_dir, session_memo
 
 N_PLANES = 4          # 2⁴ = 16 buckets ≈ √corpus at fixture scale;
 DIM = 64              # grows with log(corpus) in a real deployment.
@@ -1947,37 +1948,6 @@ def _ivf_probe_cells(vecs: DataFrame, cents_raw: DataFrame) -> DataFrame:
             .select("vec_id", F.col("ccid").alias("cell")))
 
 
-#: Per-PROCESS token in the index path: two concurrent sessions on the
-#: same sf tag would otherwise race one's full-path rebuild against the
-#: other's probe/append (same class as operators/dedup._BAND_PROC_TOKEN).
-#: Own dirs are atexit-removed and stale crash leftovers swept — the
-#: dedup module's _register_token_dir_cleanup discipline.
-_IVF_PROC_TOKEN = __import__("uuid").uuid4().hex[:8]
-
-_IVF_CLEANUP_DONE = False
-
-
-def _ivf_index_root(spark: SparkSession) -> str:
-    """Repo-anchored warehouse dir for the registered incremental-index
-    query (absolute, so the external driver's cwd doesn't matter), made
-    unique per process so concurrent sessions never share a root."""
-    import pathlib
-
-    from etl_cloud_batch_processing_spark.operators.dedup import (
-        _register_token_dir_cleanup,
-    )
-
-    global _IVF_CLEANUP_DONE
-    root = str(pathlib.Path(__file__).resolve().parents[2]
-               / "spark-warehouse" / f"ivf_index-{_IVF_PROC_TOKEN}")
-    if not _IVF_CLEANUP_DONE:
-        _register_token_dir_cleanup(root, "ivf_index-")
-        # the steady twin lives at <root>_steady/<tag>
-        _register_token_dir_cleanup(f"{root}_steady", "ivf_index-")
-        _IVF_CLEANUP_DONE = True
-    return root
-
-
 #: Shared oracle for BOTH incremental-index queries: the full
 #: maintenance cycle replayed mechanically (codebook trained on the
 #: base CTE, every vector encoded against it, standard 5-query probe).
@@ -2032,10 +2002,7 @@ def ivf_index_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed ``cell=`` partitions (static partition filter from the
     probe list — asserted via inputFiles in tests), and a retried
     batch lands idempotently in its own ``ingest=`` partition."""
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = f"{_ivf_index_root(spark)}/{tag}"
+    path = scratch_dir("ivf_index_")
     emb = _full_emb(spark, sf_dir)
     is_batch = (F.col("vec_id") % IVF_BATCH_MOD) == IVF_BATCH_REM
     build_ivf_index(spark, sf_dir, path, base_filter=~is_batch)
@@ -2046,26 +2013,12 @@ def ivf_index_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_ivf_index(spark, queries, path)
 
 
-#: One persisted base index per (session, sf_dir) for the steady-state
-#: query — the _SCORED_MEMO discipline applied to index MAINTENANCE:
-#: an index server trains once per re-train schedule, not per probe.
-#: The artifact is parquet on disk, so validity is just "this session
-#: already built it" (clearCache cannot invalidate files; a fresh
-#: session rebuilds and overwrites).
-_IVF_STEADY_MEMO: dict[str, tuple[SparkSession, str]] = {}
-
-
+# Memoized: an index server trains once per re-train schedule, not per probe.
+@session_memo
 def _steady_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = f"{_ivf_index_root(spark)}_steady/{tag}"
-    hit = _IVF_STEADY_MEMO.get(sf_dir)
-    if hit is None or hit[0] is not spark or hit[1] != path:
-        is_batch = (F.col("vec_id") % IVF_BATCH_MOD) == IVF_BATCH_REM
-        build_ivf_index(spark, sf_dir, path, base_filter=~is_batch)
-        _IVF_STEADY_MEMO[sf_dir] = (spark, path)
-    return path
+    path = scratch_dir("ivf_index_steady_")
+    is_batch = (F.col("vec_id") % IVF_BATCH_MOD) == IVF_BATCH_REM
+    return build_ivf_index(spark, sf_dir, path, base_filter=~is_batch)
 
 
 @query("ivf_index_steady_probe", oracle=_IVF_CYCLE_ORACLE)

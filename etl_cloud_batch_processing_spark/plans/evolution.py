@@ -35,23 +35,14 @@ formats implement.
 
 from __future__ import annotations
 
-import os
-import pathlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_cloud_batch_processing_spark.plans.registry import query, table
-from etl_cloud_batch_processing_spark.session import scoped_conf
+from etl_cloud_batch_processing_spark.session import scoped_conf, scratch_dir
 from etl_cloud_batch_processing_spark.sources.writers import (
     write_append_partition,
 )
-
-
-def _evolved_root(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return str(pathlib.Path(__file__).resolve().parents[2]
-               / "spark-warehouse" / "evolved_events" / tag)
 
 
 def first_two_days(spark: SparkSession, sf_dir: str) -> list[str]:
@@ -119,7 +110,7 @@ def schema_evolution_null_audit(spark: SparkSession,
     driver fetch is the 2-day date list (run_date parameterization);
     the writes are one partition each and the audit is one partial
     aggregation over the merged read."""
-    path = _evolved_root(sf_dir)
+    path = scratch_dir("evolved_events_") + "/t"
     write_evolving_partitions(spark, sf_dir, path)
     back = (spark.read.option("mergeSchema", "true").parquet(path))
     return (back.groupBy(F.col("dt").cast("string").alias("dt"))
@@ -132,12 +123,6 @@ def schema_evolution_null_audit(spark: SparkSession,
 # ---------------------------------------------------------------------------
 # Manifest-committed table lifecycle (round-9: reader-atomic publish).
 # ---------------------------------------------------------------------------
-
-def _manifested_root(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return str(pathlib.Path(__file__).resolve().parents[2]
-               / "spark-warehouse" / "manifested_events" / tag)
-
 
 @query(
     "manifest_snapshot_read",
@@ -168,14 +153,11 @@ def manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Snapshot isolation itself (an old-version reader surviving the
     delete commit) is pinned in tests/test_manifest.py; this query
     puts the driver's value hash on the lifecycle's RESULT."""
-    import shutil
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
     from etl_cloud_batch_processing_spark.sources.writers import (
         delete_where, write_clustered)
 
-    path = _manifested_root(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)  # fresh lifecycle per run
+    path = scratch_dir("manifested_events_") + "/t"
     ev = table(spark, sf_dir, "events")
     write_clustered(ev, path, ["user_id"], num_files=8)
     M.init_manifest(spark, path)
@@ -212,14 +194,11 @@ def manifest_time_travel_diff(spark: SparkSession,
     versa) the counts hash-mismatch.  Old versions cost only storage
     until ``vacuum``; at 100 TB the manifest files are KBs per version
     and the diff reads each file set once."""
-    import shutil
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
     from etl_cloud_batch_processing_spark.sources.writers import (
         delete_where, write_clustered)
 
-    path = _manifested_root(sf_dir) + "_tt"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("manifested_events_tt_") + "/t"
     ev = table(spark, sf_dir, "events")
     write_clustered(ev, path, ["user_id"], num_files=8)
     M.init_manifest(spark, path)
@@ -275,14 +254,12 @@ def merge_upsert_manifested(spark: SparkSession, sf_dir: str) -> DataFrame:
     for key discovery, a rewrite bounded by files-holding-matches, the
     source written once, commit cost independent of table size —
     against the naive full-table overwrite it replaces."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
 
     ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint").alias("cents")
     base = ev.filter(F.col("event_id") % 5 != 0).select("event_id", cents)
-    path = _tf.mkdtemp(prefix="spark_graft_merge_") + "/t"
+    path = scratch_dir("spark_graft_merge_") + "/t"
     M.publish_manifested(base, path, "r1")                     # v1
     source = (base.filter(F.col("event_id") % 3 == 0)
               .select("event_id",
@@ -345,14 +322,12 @@ def manifest_schema_evolution_read(spark: SparkSession,
     ``mergeSchema`` lists every file footer per read; the manifest
     resolves the schema from one KB-sized JSON document, and old files
     are never rewritten."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
 
     d0, d1 = first_two_days(spark, sf_dir)
     ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     cents = F.round(F.col("value") * 100).cast("bigint").alias("cents")
-    path = _tf.mkdtemp(prefix="spark_graft_mse_") + "/t"
+    path = scratch_dir("spark_graft_mse_") + "/t"
     M.publish_manifested(
         ev.filter(F.col("day") == F.lit(d0).cast("date"))
         .select("event_id", cents), path, "r1")            # v1: no flag
@@ -409,15 +384,12 @@ def mor_delete_snapshot_read(spark: SparkSession,
     a delete touching one row per file writes ONE tiny sidecar and one
     manifest rename instead of rewriting the table; readers pay a
     broadcast anti-join on only the DV'd files; compaction reclaims."""
-    import shutil
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
     from etl_cloud_batch_processing_spark.sources.writers import (
         write_clustered,
     )
 
-    path = _manifested_root(sf_dir) + "_mor"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("manifested_events_mor_") + "/t"
     ev = table(spark, sf_dir, "events")
     write_clustered(ev, path, ["user_id"], num_files=8)
     v1 = M.init_manifest(spark, path)
@@ -503,17 +475,13 @@ def _publish_cdf_lifecycle(spark: SparkSession,
     cents bumped by 7, a ``%13``-derived set of brand-new keys
     (id + 1e9) inserted.  Returns ``(table_path, old_version=2)`` so
     callers diff the pre-edit table against the latest."""
-    import shutil
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
 
     ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint").alias("cents")
     base = ev.filter(F.col("event_id") % 5 != 0).select("event_id", cents)
     r2 = ev.filter(F.col("event_id") % 5 == 0).select("event_id", cents)
-    path = _tf.mkdtemp(prefix="spark_graft_cdf_") + "/t"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("spark_graft_cdf_") + "/t"
     M.publish_manifested(base, path, "r1")        # v1
     M.publish_manifested(r2, path, "r2")          # v2
     edited = (base.filter(F.col("event_id") % 11 != 0)
@@ -608,14 +576,12 @@ def ivm_incremental_daily_revenue(spark: SparkSession,
     history.  Exact integer cents keep ⊕ associative and the hash
     stable; non-distributive aggregates (distinct users) take the
     sketch-rollup path (``hll_user_rollup``) instead."""
-    import tempfile as _tf
-
     ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     day = F.col("ts").cast("date").alias("day")
     cut = F.lit("2024-01-16 00:00:00").cast(dict(ev.dtypes)["ts"])
 
-    state_dir = _tf.mkdtemp(prefix="spark_graft_ivm_") + "/state"
+    state_dir = scratch_dir("spark_graft_ivm_") + "/state"
     (ev.filter(F.col("ts") < cut)
      .groupBy(day, "event_type")
      .agg(F.count(F.lit(1)).alias("n_events"),
@@ -760,12 +726,10 @@ def cdf_applied_ivm_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined pass over it, the merge touches the group grain —
     while the oracle's full recompute deliberately pays the whole-table
     re-scan this wiring exists to avoid."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
 
     path, v_old = _publish_cdf_lifecycle(spark, sf_dir)
-    state_dir = _tf.mkdtemp(prefix="spark_graft_cdf_ivm_") + "/state"
+    state_dir = scratch_dir("spark_graft_cdf_ivm_") + "/state"
     (M.read_manifest(spark, path, version=v_old)
      .groupBy((F.col("event_id") % 7).alias("grp"))
      .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -904,8 +868,6 @@ def dt_backfill_change_feed(spark: SparkSession,
     At 100 TB: the pre-image copy is one partition's worth of data —
     the same bytes the overwrite rewrites anyway — and the diff joins
     partition-sized inputs, never the table."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources.writers import (
         write_append_partition,
     )
@@ -917,11 +879,11 @@ def dt_backfill_change_feed(spark: SparkSession,
             .select("event_id", cents))
     day1 = (ev.filter(F.col("day") == F.lit(d1).cast("date"))
             .select("event_id", cents))
-    root = _tf.mkdtemp(prefix="spark_graft_dtcdf_") + "/t"
+    root = scratch_dir("spark_graft_dtcdf_") + "/t"
     write_append_partition(day0, root, d0)
     write_append_partition(day1, root, d1)
 
-    pre_dir = _tf.mkdtemp(prefix="spark_graft_dtcdf_") + "/pre"
+    pre_dir = scratch_dir("spark_graft_dtcdf_") + "/pre"
     (spark.read.parquet(root)
      .filter(F.col("dt").cast("string") == d0)
      .select("event_id", "cents")
@@ -979,13 +941,11 @@ def vacuum_retention_snapshot_read(spark: SparkSession,
     cost is one listing + unreferenced-file deletes, reader safety is
     a pure function of the retention window, and storage holds only
     the per-version file-set union the window requires."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
 
     ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint").alias("cents")
-    path = _tf.mkdtemp(prefix="spark_graft_vacret_") + "/t"
+    path = scratch_dir("spark_graft_vacret_") + "/t"
     M.publish_manifested(
         ev.filter(F.col("event_id") % 3 == 0).select("event_id", cents),
         path, "r1")                                        # v1: files A
@@ -1043,15 +1003,13 @@ def update_set_manifested(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, the simultaneous-assignment (column-swap) contract, the
     unknown-column refusal, and untouched-file byte-identity are pinned
     in tests/test_round12_ops.py."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
 
     ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint").alias("cents")
     base = (ev.filter(F.col("event_id") % 5 != 0)
             .select("event_id", "event_type", cents))
-    path = _tf.mkdtemp(prefix="spark_graft_update_") + "/t"
+    path = scratch_dir("spark_graft_update_") + "/t"
     M.publish_manifested(base, path, "r1")                     # v1
     M.update_where_manifested(
         spark, path, F.col("event_type") == "purchase",
@@ -1098,7 +1056,6 @@ def restore_timestamp_travel(spark: SparkSession,
     At 100 TB: restore copies NOTHING (one manifest commit
     re-referencing existing files), and timestamp resolution reads
     KB-sized manifest headers — both independent of table size."""
-    import tempfile as _tf
     import time as _time
 
     from etl_cloud_batch_processing_spark.sources import manifest as M
@@ -1108,7 +1065,7 @@ def restore_timestamp_travel(spark: SparkSession,
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type")
-    path = _tf.mkdtemp(prefix="spark_graft_restore_") + "/t"
+    path = scratch_dir("spark_graft_restore_") + "/t"
     M.publish_manifested(ev, path, "r1")                       # v1
     _, hpath, fs = M._fs(spark, path)
     t1 = M._commit_time_ms(spark, hpath, fs, path, 1)
@@ -1167,8 +1124,6 @@ def concurrent_delete_conflict_refusal(spark: SparkSession,
     in tests/test_manifest.py; every snapshot-derived writer (delete /
     replace / merge / update / compact / z-order / publish) now passes
     strict-remove."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
     from etl_cloud_batch_processing_spark.sources.writers import (
         delete_where,
@@ -1176,7 +1131,7 @@ def concurrent_delete_conflict_refusal(spark: SparkSession,
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "event_type")
-    path = _tf.mkdtemp(prefix="spark_graft_conflict_") + "/t"
+    path = scratch_dir("spark_graft_conflict_") + "/t"
     M.publish_manifested(ev, path, "r1")                       # v1
     _, v1_entries = M.current_manifest(spark, path, version=1)
     delete_where(spark, path, (F.col("event_id") % 11) == 5)   # v2
@@ -1230,8 +1185,6 @@ def manifest_stream_incremental_revenue(spark: SparkSession,
     refusal semantics (``ignoreDeletes``/``ignoreChanges``, the Delta
     streaming-source contract) are pinned in
     tests/test_round12_ops.py."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
     from etl_cloud_batch_processing_spark.sources import manifest_stream
 
@@ -1239,13 +1192,13 @@ def manifest_stream_incremental_revenue(spark: SparkSession,
     cents = F.round(F.col("value") * 100).cast("bigint").alias("cents")
     s = [ev.filter(F.col("event_id") % 3 == k)
          .select("event_type", cents) for k in (0, 1, 2)]
-    path = _tf.mkdtemp(prefix="spark_graft_mstream_") + "/t"
+    path = scratch_dir("spark_graft_mstream_") + "/t"
     M.publish_manifested(s[0], path, "r1")                     # v1
     M.publish_manifested(s[1], path, "r2")                     # v2
 
     manifest_stream.register(spark)
-    out = _tf.mkdtemp(prefix="mstream_sink_")
-    ckpt = _tf.mkdtemp(prefix="mstream_ckpt_")
+    out = scratch_dir("mstream_sink_")
+    ckpt = scratch_dir("mstream_ckpt_")
     agg = (spark.readStream.format("manifest_changes")
            .option("path", path).load()
            .groupBy("event_type")
@@ -1317,8 +1270,6 @@ def pywriter_manifest_roundtrip(spark: SparkSession,
     files with no coordination, the commit is one KB-sized rename
     regardless of data size, and a lost commit race re-reads and
     retries against the winner — never re-writes the data."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
     from etl_cloud_batch_processing_spark.sources import pywriter
 
@@ -1326,7 +1277,7 @@ def pywriter_manifest_roundtrip(spark: SparkSession,
     ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint").alias("cents")
     base = ev.select("event_id", "event_type", cents)
-    path = _tf.mkdtemp(prefix="spark_graft_pyw_") + "/t"
+    path = scratch_dir("spark_graft_pyw_") + "/t"
     for k in (0, 1):                                   # v1, v2: PYTHON
         (base.filter(F.col("event_id") % 2 == k).repartition(4)
          .write.format("manifest_table").option("path", path)
@@ -1379,8 +1330,6 @@ def pywriter_stream_exactly_once(spark: SparkSession,
     cost stays one KB-sized link per batch, and both the offset log
     (checkpoint) and the idempotence ledger (manifest) survive any
     crash point on either side."""
-    import tempfile as _tf
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
     from etl_cloud_batch_processing_spark.sources import manifest_stream
     from etl_cloud_batch_processing_spark.sources import pywriter
@@ -1391,9 +1340,9 @@ def pywriter_stream_exactly_once(spark: SparkSession,
     cents = F.round(F.col("value") * 100).cast("bigint").alias("cents")
     s = [ev.filter(F.col("event_id") % 3 == k)
          .select("event_type", cents) for k in (0, 1, 2)]
-    src = _tf.mkdtemp(prefix="spark_graft_pysw_src_") + "/t"
-    snk = _tf.mkdtemp(prefix="spark_graft_pysw_snk_") + "/t"
-    ckpt = _tf.mkdtemp(prefix="pysw_ckpt_")
+    src = scratch_dir("spark_graft_pysw_src_") + "/t"
+    snk = scratch_dir("spark_graft_pysw_snk_") + "/t"
+    ckpt = scratch_dir("pysw_ckpt_")
     M.publish_manifested(s[0], src, "r1")                      # v1
     M.publish_manifested(s[1], src, "r2")                      # v2
 

@@ -29,13 +29,13 @@ Format notes (the actual fidelity knobs, pinned here and in tests):
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_cloud_batch_processing_spark.plans.registry import query, table
+from etl_cloud_batch_processing_spark.session import scratch_dir
 from etl_cloud_batch_processing_spark.sources import readers as R
 from etl_cloud_batch_processing_spark.sources import writers as W
 
@@ -104,11 +104,7 @@ def format_roundtrip_fidelity(spark: SparkSession,
     measured argument for converting text lakes to columnar on ingest."""
     base = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    # unique per-run root (not a fixed path): two concurrent runs on
-    # the same sf tag must not interleave overwrite-writes with each
-    # other's read-backs
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = tempfile.mkdtemp(prefix=f"spark_graft_formats_{tag}_")
+    root = scratch_dir("spark_graft_formats_")
     frames = []
     for fmt in ["csv", "json", "orc"]:
         back = _roundtrip(spark, base, fmt, root)

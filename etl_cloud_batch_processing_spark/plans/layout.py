@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_cloud_batch_processing_spark.plans.registry import query, table
+from etl_cloud_batch_processing_spark.session import scratch_dir
 
 #: Bits per dimension in the Morton interleave.  8 bits cover both
 #: fixture dimensions (user_id is masked to < 256, day index < 31);
@@ -316,8 +317,6 @@ def zorder_manifested_optimize(spark: SparkSession,
     the live set, embarrassingly parallel), old snapshots stay
     readable until vacuum, and the commit is one rename regardless of
     table size."""
-    import tempfile
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
 
     ev = (table(spark, sf_dir, "events")
@@ -326,7 +325,7 @@ def zorder_manifested_optimize(spark: SparkSession,
                       F.lit((1 << Z_BITS) - 1)).alias("x"),
                   F.datediff(F.to_date("ts"), F.lit(_EPOCH).cast("date"))
                   .cast("bigint").alias("y")))
-    root = tempfile.mkdtemp(prefix="spark_graft_zorder_manifest_")
+    root = scratch_dir("spark_graft_zorder_manifest_")
     base = f"{root}/t"
     ev.repartition(ZM_FILES_BEFORE).write.mode("overwrite").parquet(base)
     v1 = M.init_manifest(spark, base)

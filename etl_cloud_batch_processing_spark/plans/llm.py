@@ -23,6 +23,7 @@ from etl_cloud_batch_processing_spark.functions import exprs as X
 from etl_cloud_batch_processing_spark.functions import text as T
 from etl_cloud_batch_processing_spark.functions import vectors as V
 from etl_cloud_batch_processing_spark.plans.registry import ptable, query, table
+from etl_cloud_batch_processing_spark.session import session_memo
 
 # DuckDB twin of functions/text.py normalize(): lower, trim, collapse
 # whitespace (needs the 'g' flag — DuckDB replaces first match only by
@@ -635,24 +636,11 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash_pairs(spark, sf_dir)
 
 
-#: One simhash signature + band-join pipeline per (session, fixture
-#: dir): three registered queries (the pair report, PageRank, the
-#: degree/assortativity stats) consume the same pair frame — the
-#: _SCORED_MEMO / _BPE_MEMO discipline (operators/dedup.py,
-#: plans/tokenization.py).
-_SIMHASH_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+# Memoized: the pair report, PageRank and degree stats share this frame.
+@session_memo
 def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (doc_a, doc_b, hamming) verified simhash pair frame,
-    persisted and materialized once per (session, sf_dir); valid only
-    while still cached (bench.py clearCache() invalidates, same as the
-    scored-pairs memo)."""
-    hit = _SIMHASH_MEMO.get(sf_dir)
-    if (hit is not None and hit[0] is spark
-            and (hit[1].storageLevel.useMemory
-                 or hit[1].storageLevel.useDisk)):
-        return hit[1]
+    """(doc_a, doc_b, hamming) verified simhash pair frame, persisted
+    and materialized once per (session, sf_dir)."""
     sig = _simhash_frame(spark, sf_dir)
     bands = sig.select(
         "doc_id", "simhash",
@@ -684,7 +672,6 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cand.filter(F.col("hamming") <= SIMHASH_MAX_HAMMING).persist()
     pairs.count()    # pins the pair-grain cache
     keyed.unpersist()  # corpus×bands-grain; downstream is pair-grain
-    _SIMHASH_MEMO[sf_dir] = (spark, pairs)
     return pairs
 
 

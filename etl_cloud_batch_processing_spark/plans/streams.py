@@ -6,15 +6,13 @@ correctness goes through the same DuckDB oracle gate as everything else.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_cloud_batch_processing_spark.plans.registry import query, table
 from etl_cloud_batch_processing_spark.plans import sketches as SK
-from etl_cloud_batch_processing_spark.session import scoped_conf
+from etl_cloud_batch_processing_spark.session import scoped_conf, scratch_dir
 from etl_cloud_batch_processing_spark.streaming import windows as W
 from etl_cloud_batch_processing_spark.streaming.stateful import SESSION_GAP_MS
 
@@ -115,8 +113,8 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the maximum observed event time — the oracle's WHERE clause.  (The
     in-flight final window is withheld; it would emit on the next batch
     of arrivals.)"""
-    out = tempfile.mkdtemp(prefix="stream_sink_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
+    out = scratch_dir("stream_sink_")
+    ckpt = scratch_dir("stream_ckpt_")
     result = W.tumbling_counts(W.events_stream(spark, sf_dir))
     return _ntz(W.run_available_now(
         result, out, ckpt,
@@ -143,8 +141,8 @@ def streaming_user_totals_stateful(spark: SparkSession,
     made oracle-checkable through its convergence property."""
     from etl_cloud_batch_processing_spark.streaming import stateful as S
 
-    out = tempfile.mkdtemp(prefix="stateful_sink_")
-    ckpt = tempfile.mkdtemp(prefix="stateful_ckpt_")
+    out = scratch_dir("stateful_sink_")
+    ckpt = scratch_dir("stateful_ckpt_")
     result = S.user_running_totals_stream(W.events_stream(spark, sf_dir))
     with scoped_conf(spark, {W.SHUFFLE_PARTITIONS: W.events_state_partitions(
             spark, sf_dir, python_stateful=True)}):
@@ -226,8 +224,8 @@ def streaming_pysource_event_counts(spark: SparkSession,
     from etl_cloud_batch_processing_spark.sources import pysource
 
     pysource.register(spark)
-    out = tempfile.mkdtemp(prefix="pysrc_sink_")
-    ckpt = tempfile.mkdtemp(prefix="pysrc_ckpt_")
+    out = scratch_dir("pysrc_sink_")
+    ckpt = scratch_dir("pysrc_ckpt_")
     rows, batch_rows = 400, 200
 
     agg = (spark.readStream.format("synthetic_events")
@@ -274,8 +272,8 @@ def _drain_tws(spark: SparkSession, result: DataFrame,
     this family."""
     from etl_cloud_batch_processing_spark.streaming import stateful as S
 
-    out = tempfile.mkdtemp(prefix=f"{prefix}_sink_")
-    ckpt = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
+    out = scratch_dir(f"{prefix}_sink_")
+    ckpt = scratch_dir(f"{prefix}_ckpt_")
     with scoped_conf(spark, {**_ROCKSDB,
                              W.SHUFFLE_PARTITIONS: partitions}):
         return S.drain_running_totals(result, out, ckpt)
@@ -440,8 +438,8 @@ def _drain_tws_ptime(spark: SparkSession, result: DataFrame,
     like :func:`_drain_tws`."""
     import time
 
-    out = tempfile.mkdtemp(prefix=f"{prefix}_sink_")
-    ckpt = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
+    out = scratch_dir(f"{prefix}_sink_")
+    ckpt = scratch_dir(f"{prefix}_ckpt_")
     with scoped_conf(spark, _ROCKSDB):
         with scoped_conf(spark, {W.SHUFFLE_PARTITIONS: partitions}):
             q = (result.writeStream
@@ -676,10 +674,8 @@ def streaming_enriched_segments(spark: SparkSession,
     dimension picks up updates between batches.  Drained AvailableNow
     into a parquet sink and read back, so the whole streaming path —
     source, join, exactly-once sink — sits under the batch oracle."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="enrich_sink_")
-    ckpt = tempfile.mkdtemp(prefix="enrich_ckpt_")
+    out = scratch_dir("enrich_sink_")
+    ckpt = scratch_dir("enrich_ckpt_")
     cust = F.broadcast(table(spark, sf_dir, "customer")
                        .select("c_custkey", "c_mktsegment"))
     ev = W.events_stream(spark, sf_dir)
@@ -705,10 +701,8 @@ def streaming_distinct_user_event_types(spark: SparkSession,
     state store holds one compact entry per live key; bounding it with
     ``withWatermark`` + a ts column in the subset is the documented
     retention knob when keys churn."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="dedup_sink_")
-    ckpt = tempfile.mkdtemp(prefix="dedup_ckpt_")
+    out = scratch_dir("dedup_sink_")
+    ckpt = scratch_dir("dedup_ckpt_")
     ev = W.events_stream(spark, sf_dir)
     deduped = (ev.dropDuplicates(["user_id", "event_type"])
                .select("user_id", "event_type"))
@@ -739,10 +733,8 @@ def streaming_click_purchase_attribution(spark: SparkSession,
     stream joins are rejected by Spark outright — the time bound is
     correctness AND the 100 TB memory story.  Drained AvailableNow into
     a parquet sink under the batch self-join oracle."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="attr_sink_")
-    ckpt = tempfile.mkdtemp(prefix="attr_ckpt_")
+    out = scratch_dir("attr_sink_")
+    ckpt = scratch_dir("attr_ckpt_")
     purchases = (W.events_stream(spark, sf_dir)
                  .filter(F.col("event_type") == "purchase")
                  .select(F.col("event_id").alias("purchase_id"),
@@ -802,10 +794,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     could extend it (watermark past its end), hence the oracle's HAVING
     clause withholding the still-open tail sessions.  State per key is
     O(open sessions), not O(events) — the 100 TB story."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="sess_sink_")
-    ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
+    out = scratch_dir("sess_sink_")
+    ckpt = scratch_dir("sess_ckpt_")
     result = W.session_windows(W.events_stream(spark, sf_dir))
     return _ntz(W.run_available_now(
         result, out, ckpt,
@@ -834,11 +824,9 @@ def streaming_foreachbatch_upsert(spark: SparkSession,
     throttled to 1 file per trigger to force a genuinely multi-batch
     run.  At 100 TB the merge cost is O(|keys|) per batch, independent
     of history length."""
-    import tempfile
-
-    src = tempfile.mkdtemp(prefix="upsert_src_")
-    state_root = tempfile.mkdtemp(prefix="upsert_state_")
-    ckpt = tempfile.mkdtemp(prefix="upsert_ckpt_")
+    src = scratch_dir("upsert_src_")
+    state_root = scratch_dir("upsert_state_")
+    ckpt = scratch_dir("upsert_ckpt_")
     events = table(spark, sf_dir, "events")
     events.repartition(4).write.mode("overwrite").parquet(src)
 
@@ -904,10 +892,8 @@ def streaming_unattributed_purchases(spark: SparkSession,
     exactly that emission rule, so the withheld boundary rows are part
     of the specified semantics, not slop: matched rows all emit;
     null rows emit iff p_ts < least(max p_ts, max c_ts)."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="unattr_sink_")
-    ckpt = tempfile.mkdtemp(prefix="unattr_ckpt_")
+    out = scratch_dir("unattr_sink_")
+    ckpt = scratch_dir("unattr_ckpt_")
     purchases = (W.events_stream(spark, sf_dir)
                  .filter(F.col("event_type") == "purchase")
                  .select(F.col("event_id").alias("purchase_id"),
@@ -954,10 +940,8 @@ def streaming_dedup_within_watermark(spark: SparkSession,
     proportional to keys-per-delay-window only.  Output is projected to
     the key columns (the set is the contract; which physical duplicate
     arrived first is not)."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="wmdedup_sink_")
-    ckpt = tempfile.mkdtemp(prefix="wmdedup_ckpt_")
+    out = scratch_dir("wmdedup_sink_")
+    ckpt = scratch_dir("wmdedup_ckpt_")
     ev = W.events_stream(spark, sf_dir)
     deduped = (ev.withColumn("day", F.col("ts").cast("date"))
                .withWatermark("ts", "90 days")
@@ -1003,10 +987,8 @@ def streaming_hopping_counts(spark: SparkSession,
     with the tumbling twin, append mode emits exactly the windows whose
     END is at or before the max observed event time (the oracle's WHERE
     clause); the two still-open windows are withheld."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="hop_sink_")
-    ckpt = tempfile.mkdtemp(prefix="hop_ckpt_")
+    out = scratch_dir("hop_sink_")
+    ckpt = scratch_dir("hop_ckpt_")
     ev = W.events_stream(spark, sf_dir).withWatermark("ts", "0 seconds")
     agg = (ev.groupBy(F.window("ts", "2 days", "1 day").alias("w"),
                       "event_type")
@@ -1062,9 +1044,9 @@ def streaming_cms_cell_merge(spark: SparkSession,
     drop (the round-8 advice finding)."""
     import os as _os
 
-    src = tempfile.mkdtemp(prefix="cms_src_")
-    state_root = tempfile.mkdtemp(prefix="cms_state_")
-    ckpt = tempfile.mkdtemp(prefix="cms_ckpt_")
+    src = scratch_dir("cms_src_")
+    state_root = scratch_dir("cms_state_")
+    ckpt = scratch_dir("cms_ckpt_")
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     docs.repartition(4).write.mode("overwrite").parquet(src)
 
@@ -1157,9 +1139,9 @@ def streaming_dq_violation_merge(spark: SparkSession,
     from etl_cloud_batch_processing_spark.operators import (
         expectations as XP)
 
-    src = tempfile.mkdtemp(prefix="sdq_src_")
-    state_root = tempfile.mkdtemp(prefix="sdq_state_")
-    ckpt = tempfile.mkdtemp(prefix="sdq_ckpt_")
+    src = scratch_dir("sdq_src_")
+    state_root = scratch_dir("sdq_state_")
+    ckpt = scratch_dir("sdq_ckpt_")
     ev = table(spark, sf_dir, "events")
     ev.repartition(4).write.mode("overwrite").parquet(src)
 
@@ -1237,16 +1219,11 @@ def streaming_manifest_ingest(spark: SparkSession,
     manifest's dt entries make the ingest partitions prunable; and the
     CDF/IVM/SCD2 consumers (``change_feed`` family) read the SAME
     table incrementally — this query is their missing producer half."""
-    import tempfile
-
     from etl_cloud_batch_processing_spark.sources import manifest as M
-    from etl_cloud_batch_processing_spark.streaming.windows import (
-        events_schema,
-    )
 
-    src = tempfile.mkdtemp(prefix="mingest_src_")
-    path = tempfile.mkdtemp(prefix="mingest_tbl_") + "/t"
-    ckpt = tempfile.mkdtemp(prefix="mingest_ckpt_")
+    src = scratch_dir("mingest_src_")
+    path = scratch_dir("mingest_tbl_") + "/t"
+    ckpt = scratch_dir("mingest_ckpt_")
     events = table(spark, sf_dir, "events")
     events.repartition(4).write.mode("overwrite").parquet(src)
 

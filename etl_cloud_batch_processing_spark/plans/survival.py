@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_cloud_batch_processing_spark.plans.registry import query, table
+from etl_cloud_batch_processing_spark.session import session_memo
 
 #: Observation horizon (days after a user's first event).  A user whose
 #: first purchase lands within H days is an observed conversion at that
@@ -47,13 +48,8 @@ SURVIVAL_HORIZON_DAYS = 5
 _CONVERT_TYPE = "purchase"
 
 
-#: One duration-frame build per (session, fixture dir): four survival
-#: queries consume the same frame, and re-persisting it per query left
-#: four identical cached copies behind for the session's lifetime
-#: (round-7 advice — same discipline as tokenization._BPE_MEMO).
-_DUR_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+# Memoized: four survival queries share one persisted copy of this frame.
+@session_memo
 def _durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user censored duration frame: (user_id, cohort, t, died).
 
@@ -61,12 +57,6 @@ def _durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin — event_id is unique, so the struct-min is total);
     ``t`` is days from first event to first purchase, clamped to the
     horizon; ``died`` marks an observed conversion inside it."""
-    hit = _DUR_MEMO.get(sf_dir)
-    if (hit is not None and hit[0] is spark
-            and (hit[1].storageLevel.useMemory
-                 or hit[1].storageLevel.useDisk)):
-        # valid only while still cached (bench clears caches per run)
-        return hit[1]
     ev = table(spark, sf_dir, "events")
     first = (ev.groupBy("user_id")
              .agg(F.min("ts").alias("t0"),
@@ -78,19 +68,16 @@ def _durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     died = F.col("tp").isNotNull() & (dur <= SURVIVAL_HORIZON_DAYS)
     # Persisted: every consumer reads this frame 2-4 times (totals,
     # death counts, pooled counts); without the persist each aggregate
-    # re-runs both corpus-scale user-grain passes (the bpe_rounds
-    # memoization discipline — at 100 TB this frame is users-sized and
-    # the thing you cache, the events scan is the thing you don't
-    # repeat).
-    out = (first.join(conv, "user_id", "left")
-           .select("user_id", "cohort",
-                   F.when(died, dur).otherwise(
-                       F.lit(SURVIVAL_HORIZON_DAYS))
-                   .cast("bigint").alias("t"),
-                   died.alias("died"))
-           .persist())
-    _DUR_MEMO[sf_dir] = (spark, out)
-    return out
+    # re-runs both corpus-scale user-grain passes (at 100 TB this frame
+    # is users-sized and the thing you cache, the events scan is the
+    # thing you don't repeat).
+    return (first.join(conv, "user_id", "left")
+            .select("user_id", "cohort",
+                    F.when(died, dur).otherwise(
+                        F.lit(SURVIVAL_HORIZON_DAYS))
+                    .cast("bigint").alias("t"),
+                    died.alias("died"))
+            .persist())
 
 
 def _km_curve(u: DataFrame, strata: list[str]) -> DataFrame:

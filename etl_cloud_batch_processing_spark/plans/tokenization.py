@@ -39,6 +39,7 @@ from etl_cloud_batch_processing_spark.plans.registry import (
     query,
     table,
 )
+from etl_cloud_batch_processing_spark.session import session_memo
 
 # ---------------------------------------------------------------------------
 # BPE: train k merges, apply them, report compression.
@@ -94,18 +95,12 @@ def _pair_counts(toks_df: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n")))
 
 
-#: One BPE training per (session, fixture dir, round count): three
-#: registered queries (train / encode-counts / compression) consume the
-#: same rounds, and re-running the full train per query both wasted a
-#: train's wall time twice over and left ~k persisted corpus-sized
-#: frames behind PER QUERY for the session's lifetime (round-7 advice).
-_BPE_MEMO: dict[tuple[str, int], tuple[SparkSession, tuple]] = {}
-
-
-def bpe_rounds(spark: SparkSession, sf_dir: str,
-               k: int = BPE_ROUNDS) -> tuple[DataFrame, DataFrame,
-                                             DataFrame]:
-    """Run k unrolled BPE training rounds over the documents corpus.
+# Memoized: train, encode-counts and compression share one training.
+@session_memo
+def bpe_rounds(spark: SparkSession,
+               sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Run :data:`BPE_ROUNDS` (k) unrolled BPE training rounds over the
+    documents corpus.
 
     Returns ``(toks0, toks_k, merges)``: the initial per-doc token
     arrays, the arrays after k merges, and the learned merge table
@@ -123,26 +118,14 @@ def bpe_rounds(spark: SparkSession, sf_dir: str,
     count() actions — the edges.count() pinning discipline), the
     intermediate round frames are unpersisted: only ``toks0`` and
     ``toks_k`` stay cached, so a full sweep carries 2 cached
-    corpus-sized frames instead of ~k per consuming query.  The whole
-    train is memoized per (session, sf_dir, k) so the three consuming
-    queries share ONE training."""
-    memo_key = (sf_dir, k)
-    hit = _BPE_MEMO.get(memo_key)
-    if (hit is not None and hit[0] is spark
-            and all(f.storageLevel.useMemory or f.storageLevel.useDisk
-                    for f in (hit[1][0], hit[1][1]))):
-        # memo valid only while the frames are still cached: an external
-        # clearCache() (bench.py does one per run) would otherwise hand
-        # back unpersisted lineage whose doubly-referenced folds
-        # re-execute 2^k times
-        return hit[1]
+    corpus-sized frames instead of ~k per consuming query."""
     toks0 = (ptable(spark, sf_dir, "documents")
              .select("doc_id", T.tokens("text").alias("toks"))
              .persist())
     cur = toks0
     merge_frames: list[DataFrame] = []
     round_frames: list[DataFrame] = []
-    for r in range(1, k + 1):
+    for r in range(1, BPE_ROUNDS + 1):
         best = (_pair_counts(cur)
                 .orderBy(F.desc("n"), F.asc("a"), F.asc("b")).limit(1)
                 .select(F.col("a").alias("m_a"), F.col("b").alias("m_b"),
@@ -163,9 +146,7 @@ def bpe_rounds(spark: SparkSession, sf_dir: str,
     cur.count()     # materializes round k from cached round k-1
     for f in round_frames[:-1]:
         f.unpersist()
-    result = (toks0, cur, merges)
-    _BPE_MEMO[memo_key] = (spark, result)
-    return result
+    return toks0, cur, merges
 
 
 def _bpe_oracle_ctes(k: int = BPE_ROUNDS) -> str:

@@ -1,4 +1,6 @@
-"""SparkSession factory with the engine's standard config block.
+"""SparkSession factory with the engine's standard config block, and
+the only owner of per-session state: :func:`session_memo` for builds
+shared by several queries, :func:`scratch_dir` for files a query writes.
 
 Config decisions (SURVEY.md §4.2 "config + layout, not rules"):
 
@@ -22,12 +24,16 @@ Config decisions (SURVEY.md §4.2 "config + layout, not rules"):
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import functools
 import os
+import shutil
 import tempfile
+import time
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Shuffle partition default for local test scale.  At cluster scale AQE
 # coalesces from a deliberately-high initial number instead; see
@@ -113,22 +119,26 @@ def _ship_package(spark: SparkSession) -> None:
     app_id = sc.applicationId
     if app_id in _PKG_SHIPPED:
         return
+    sc.addPyFile(_package_zip())
+    _PKG_SHIPPED.add(app_id)
+
+
+@functools.cache
+def _package_zip() -> str:
+    """This package's sources, zipped once per process into a scratch
+    dir (so the zip goes when the process does)."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{pkg_name}-{os.getpid()}.zip")
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_STORED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if not fname.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fname)
-                    rel = os.path.join(
-                        pkg_name, os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    sc.addPyFile(zip_path)
-    _PKG_SHIPPED.add(app_id)
+    zip_path = os.path.join(scratch_dir("pkg_"), f"{pkg_name}.zip")
+    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_STORED) as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fname in files:
+                if not fname.endswith(".py"):
+                    continue
+                full = os.path.join(root, fname)
+                zf.write(full, os.path.join(
+                    pkg_name, os.path.relpath(full, pkg_dir)))
+    return zip_path
 
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
@@ -179,3 +189,68 @@ def scoped_conf(spark: SparkSession, conf: dict):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def session_memo(fn):
+    """Memoize ``fn(spark, *args)`` per session and per ``args``.
+
+    A hit is valid only while every DataFrame in the result (the result
+    itself, or the members of a tuple result) is still cached: after an
+    external ``clearCache()`` (bench.py does one per run) a memoized
+    frame is bare lineage that would re-run the whole build once per
+    consumer, so it is rebuilt instead.  A result with no DataFrame,
+    such as the path of an index written to disk, stays valid for the
+    session."""
+    memo: dict[tuple, tuple[SparkSession, object]] = {}
+
+    @functools.wraps(fn)
+    def memoized(spark: SparkSession, *args):
+        hit = memo.get(args)
+        if hit is not None and hit[0] is spark:
+            vals = hit[1] if isinstance(hit[1], tuple) else (hit[1],)
+            if all(v.storageLevel.useMemory or v.storageLevel.useDisk
+                   for v in vals if isinstance(v, DataFrame)):
+                return hit[1]
+        value = fn(spark, *args)
+        memo[args] = (spark, value)
+        return value
+
+    return memoized
+
+
+#: Scratch roots older than this are leftovers of crashed processes.
+_TOKEN_DIR_STALE_SECS = 48 * 3600
+
+_SCRATCH_PREFIX = "spark_graft_scratch-"
+_scratch_root: str | None = None
+
+
+def _register_token_dir_cleanup(root: str, prefix: str) -> None:
+    """atexit-remove this process's own ``root`` and sweep same-prefix
+    siblings whose mtime is older than :data:`_TOKEN_DIR_STALE_SECS`
+    (a crashed process never ran its atexit)."""
+    atexit.register(shutil.rmtree, root, True)
+    parent = os.path.dirname(root)
+    try:
+        cutoff = time.time() - _TOKEN_DIR_STALE_SECS
+        for name in os.listdir(parent):
+            sib = os.path.join(parent, name)
+            if (name.startswith(prefix) and sib != root
+                    and os.path.isdir(sib)
+                    and os.path.getmtime(sib) < cutoff):
+                shutil.rmtree(sib, ignore_errors=True)
+    except OSError:
+        pass
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh, empty directory for one query's sinks, checkpoints,
+    tables or indexes.  Every one lives under a single per-process root
+    in ``tempfile.gettempdir()``, resolved on the first call (so a
+    ``TMPDIR`` set after import is honoured) and removed at exit;
+    concurrent processes never share a path."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix=_SCRATCH_PREFIX)
+        _register_token_dir_cleanup(_scratch_root, _SCRATCH_PREFIX)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)

@@ -72,6 +72,29 @@ def test_no_schemaless_sink_read_back_in_streaming_paths():
     assert not offenders, offenders
 
 
+def test_session_state_only_through_session_helpers():
+    """Run state has one mechanism each, in session.py: memos go
+    through ``session_memo`` (no module-level ``*_MEMO`` dict, no
+    hand-rolled ``storageLevel.useMemory`` gate) and scratch
+    directories through ``scratch_dir`` (no bare ``mkdtemp(``, except
+    the protobuf shim in streaming/stateful.py, which processes share
+    by design)."""
+    import re
+
+    pkg = ROOT / "etl_cloud_batch_processing_spark"
+    rules = [(re.compile(r"mkdtemp\("), {"streaming/stateful.py"}),
+             (re.compile(r"^\w*_MEMO\b.*="), set()),
+             (re.compile(r"storageLevel\.useMemory"), set())]
+    offenders = [f"{f.relative_to(ROOT)}:{i}"
+                 for f in sorted(pkg.rglob("*.py"))
+                 if f.name != "session.py"
+                 for i, line in enumerate(f.read_text().splitlines(), 1)
+                 for pat, allowed in rules
+                 if str(f.relative_to(pkg)) not in allowed
+                 and pat.search(line)]
+    assert not offenders, offenders
+
+
 def test_graded_window_rotates_ungraded_first():
     """The external harness grades at most the first 50 queries()
     entries (DRIVER_NOTES.md #2).  Ordering must be MECHANICAL, not

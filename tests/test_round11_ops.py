@@ -256,19 +256,17 @@ def test_vacuum_retention_query_flags(spark):
     assert 0 < r.v2_rows < r.latest_rows
 
 
-def test_band_index_feed_maintenance_contents(spark):
+def test_band_index_feed_maintenance_contents(spark, tmp_path):
     """Beyond the per-band aggregate hash: the maintained index must
     contain ZERO entries for deleted docs, every inserted doc's full
     band set, and stay probe-able (an indexed query still joins)."""
-    import tempfile
-
     from etl_cloud_batch_processing_spark.operators.dedup import (
         N_BANDS, _par_docs, band_table, probe_band_index,
     )
     from etl_cloud_batch_processing_spark.sources import manifest as M
 
     docs = _par_docs(spark, SF)
-    path = tempfile.mkdtemp(prefix="bandmaint_test_") + "/idx"
+    path = str(tmp_path / "idx")
     M.publish_manifested(band_table(docs), path, "base")
     M.delete_where_manifested(spark, path, (F.col("doc_id") % 7) == 0)
     inserts = (docs.filter(F.col("doc_id") % 13 == 0)

@@ -578,7 +578,7 @@ def test_token_dir_cleanup_sweeps_stale_siblings(tmp_path):
     siblings or the process's own root."""
     import time
 
-    from etl_cloud_batch_processing_spark.operators.dedup import (
+    from etl_cloud_batch_processing_spark.session import (
         _TOKEN_DIR_STALE_SECS, _register_token_dir_cleanup,
     )
 

@@ -90,6 +90,34 @@ def test_steady_probe_reuses_memoized_build(spark, sf_dir, monkeypatch):
     assert out.count() > 0
 
 
+def test_steady_probe_keeps_same_basename_fixtures_apart(spark, sf_dir,
+                                                         tmp_path):
+    """A second fixture dir with the same basename but other embeddings
+    builds its own base index: the first dir's memoized index must not
+    be overwritten by the second build."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    twin = tmp_path / os.path.basename(sf_dir.rstrip("/"))
+    twin.mkdir()
+    for name in os.listdir(sf_dir):
+        if name != "embeddings.parquet":
+            os.symlink(os.path.join(sf_dir, name), twin / name)
+    emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    flipped = emb["embedding"].take(list(range(emb.num_rows - 1, -1, -1)))
+    pq.write_table(emb.set_column(emb.schema.get_field_index("embedding"),
+                                  "embedding", flipped),
+                   twin / "embeddings.parquet")
+
+    steady = plans.REGISTRY["ivf_index_steady_probe"].builder
+    want = _sorted_rows(
+        plans.REGISTRY["ivf_index_probe_topk"].builder(spark, sf_dir))
+    assert _sorted_rows(steady(spark, sf_dir)) == want
+    assert _sorted_rows(steady(spark, str(twin))) != want
+    assert _sorted_rows(steady(spark, sf_dir)) == want
+
+
 # ---------------------------------------------------------------------------
 # Manifest lifecycle query: sanity beyond the parity test.
 # ---------------------------------------------------------------------------
